@@ -183,9 +183,11 @@ object ServeBench {
         .withColumn("dt", graft.analysis.DtPrune.dtOf(col("start_ts")))
         .write.mode("overwrite").partitionBy("dt").parquet(s"$work2/tier2")
     }
-    val viaExactCold = new Via(spark, work2, graphServeThreshold = Long.MaxValue)
-    val viaExactPin = new Via(spark, work2, graphServeThreshold = Long.MaxValue)
-    val viaGraphPin = new Via(spark, work2, graphServeThreshold = 1L)
+    def forcedVia(gate: Long) = new Via(spark, work2,
+      clustersServeThreshold = gate, triageServeThreshold = gate)
+    val viaExactCold = forcedVia(Long.MaxValue)
+    val viaExactPin = forcedVia(Long.MaxValue)
+    val viaGraphPin = forcedVia(1L)
     println(s"[servebench] big store: $nBig rows")
     var buildSec = -1.0
     if (!Files.exists(Paths.get(viaGraphPin.graphIndexPath))) {
@@ -250,11 +252,11 @@ object ServeBench {
     }
 
     // ---- concurrent graph-served leg: the resident-segment walk, the
-    // per-call hit collect, and the candidate pipeline all shared by N
+    // per-call hit collect, and the driver rank all shared by N
     // callers at once — the load shape the single-caller table above
     // cannot see (lock convoys, pool contention, re-cache storms).
     val conc = sys.env.get("SPARK_GRAFT_SERVE_BIG_CONC").map(_.toInt).getOrElse(8)
-    def runConcLeg(tag: String): Unit = {
+    def runConcLeg(): Unit = {
       val verbs = Array("clusters", "triage")
       val stop = new AtomicBoolean(false)
       val obs = new java.util.concurrent.ConcurrentLinkedQueue[Obs]()
@@ -286,7 +288,7 @@ object ServeBench {
       verbs.foreach { v =>
         val xs = all.filter(_.verb == v).map(_.micros)
         val line =
-          f"""{"leg":"$tag","level":$conc,"verb":"$v","rows":$bigRows,""" +
+          f"""{"leg":"serve_big_conc","level":$conc,"verb":"$v","rows":$bigRows,""" +
           f""""calls":${xs.size},"p50_ms":${pctL(xs, 0.5)}%.1f,""" +
           f""""p95_ms":${pctL(xs, 0.95)}%.1f,"qps_total":$qps%.2f}"""
         println(s"[servebench] $line")
@@ -295,21 +297,10 @@ object ServeBench {
       }
     }
     if (conc > 0) {
-      // SAME-PROCESS A/B of the pin layout (run-to-run ambient swings on
-      // this box dwarf the effect otherwise): the default time-order pin
-      // vs the rhythm_hash-range-clustered pin, same callers/duration.
-      // The measured answer (600k, 8 mixed callers): time order 22.2 QPS
-      // vs hash order 5.6 — the ts-window filters lose their batch
-      // skipping under hash clustering, which costs more than the hash
-      // lookups gain, hence clusterByHash stays opt-in.
       viaGraphPin.unpinServing(); viaGraphPin.pinServing()
       (1 to 2).foreach(_ => Seq("clusters", "triage")
         .foreach(callBig(viaGraphPin, _)))
-      runConcLeg("serve_big_conc")
-      viaGraphPin.unpinServing(); viaGraphPin.pinServing(clusterByHash = true)
-      (1 to 2).foreach(_ => Seq("clusters", "triage")
-        .foreach(callBig(viaGraphPin, _)))
-      runConcLeg("serve_big_conc_hashpin")
+      runConcLeg()
     }
     spark.stop()
   }

@@ -16,39 +16,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * @param warehouse root directory: `tier1/`, `tier2/`, `rules`, `schemas`,
   *                  `evals/`, `checkpoints/`, `graphidx/` live under it
-  * @param graphServeThreshold Tier-2 corpus size (graph-index node count)
-  *                  above which `clusters`/`triage` serve through the
+  * @param clustersServeThreshold Tier-2 corpus size (graph-index node
+  *                  count) at/above which `clusters` serves through the
   *                  graph ANN leg instead of the exact scan — mirroring
   *                  the reference's always-HNSW Tier-2 while keeping the
   *                  exact path where scanning is cheaper than probing.
-  *                  -1 (the default) routes EACH VERB at its own measured
-  *                  crossover ([[Via.ClustersServeThreshold]] /
-  *                  [[Via.TriageServeThreshold]] — triage's exact scan
+  *                  Defaults to the verb's measured crossover.
+  * @param triageServeThreshold the same gate for `triage`; its exact scan
   *                  stays competitive far longer because its query vector
   *                  is one cheap filtered average while clusters pays a
-  *                  full-text match per row; SCALE.md crossover table); an
-  *                  explicit value overrides BOTH verbs (the r12-and-
-  *                  earlier behavior, used by benches to force one path).
-  * @param clustersServeThreshold per-verb override for `clusters` (-1 =
-  *                  inherit `graphServeThreshold` resolution)
-  * @param triageServeThreshold per-verb override for `triage` (-1 =
-  *                  inherit `graphServeThreshold` resolution)
+  *                  full-text match per row (SCALE.md crossover table).
   */
 final class Via(spark: SparkSession, warehouse: String,
-    graphServeThreshold: Long = -1L,
-    clustersServeThreshold: Long = -1L,
-    triageServeThreshold: Long = -1L) {
-
-  private def resolveThreshold(perVerb: Long, verbDefault: Long): Long =
-    if (perVerb >= 0) perVerb
-    else if (graphServeThreshold >= 0) graphServeThreshold
-    else verbDefault
-  /** Resolved routing gates (node count at/above which the verb serves
-    * through the graph index). */
-  private[graft] val clustersGate: Long =
-    resolveThreshold(clustersServeThreshold, Via.ClustersServeThreshold)
-  private[graft] val triageGate: Long =
-    resolveThreshold(triageServeThreshold, Via.TriageServeThreshold)
+    private[graft] val clustersServeThreshold: Long = Via.ClustersServeThreshold,
+    private[graft] val triageServeThreshold: Long = Via.TriageServeThreshold) {
 
   val tier1Path = s"$warehouse/tier1"
   val tier2Path = s"$warehouse/tier2"
@@ -69,10 +50,6 @@ final class Via(spark: SparkSession, warehouse: String,
   // batches / maintenance). Unpinned behavior is unchanged: each call
   // reads the store fresh.
   @volatile private var pinnedTier2: Option[DataFrame] = None
-  // layout of the CURRENT pin, so refreshes re-pin with the same layout:
-  // a deployment that opted into the hash-clustered layout must not have
-  // it silently reverted by a maintenance sweep's repin (ADVICE r12)
-  @volatile private var pinnedLayoutHash: Boolean = false
 
   /** Pin the current Tier-2 store as the serving snapshot (caches it in
     * executor memory; the first call pays the materialization).
@@ -91,47 +68,32 @@ final class Via(spark: SparkSession, warehouse: String,
     * the two freshly cached snapshots persisted but unreferenced —
     * leaking executor cache memory until session end (ADVICE r11). The
     * cache materialization runs outside the lock; only the
-    * swap-and-unpersist is serialized. */
-  def pinServing(): Unit = pinServing(clusterByHash = false)
-
-  /** [[pinServing]] with the cache LAYOUT exposed. The in-memory
-    * columnar cache keeps per-batch column stats and prunes batches
-    * against filters (`spark.sql.inMemoryColumnarStorage
-    * .partitionPruning`), so the snapshot's row order decides which
-    * serving filters get cheap batch skipping — layout must follow the
-    * DOMINANT lookup key, exactly like on-disk stores. The default
-    * (raw scan order ≈ dt/time order) serves the time-windowed verbs;
-    * `clusterByHash = true` range-clusters by `rhythm_hash` instead,
-    * trading that away for hash-IN skipping (triage example-vector
-    * lookups). Measured SAME-PROCESS on the 600k ServeBench store at 8
-    * mixed callers: time order 22.2 QPS vs hash order 5.6 — the mixed
-    * workload is ts-window-dominated, so hash clustering is opt-in for
-    * hash-lookup-heavy deployments only. */
-  def pinServing(clusterByHash: Boolean): Unit = {
+    * swap-and-unpersist is serialized.
+    *
+    * The snapshot keeps the store's scan order (≈ dt/time order): the
+    * in-memory columnar cache prunes batches by per-batch column stats,
+    * so that order gives the time-windowed serving filters cheap batch
+    * skipping. A `rhythm_hash`-range-clustered layout was measured
+    * against it SAME-PROCESS on the 600k ServeBench store at 8 mixed
+    * callers — time order 22.2 QPS vs hash order 5.6 — and removed. */
+  def pinServing(): Unit = {
     // the snapshot is built from the EXPLICIT file list, not a root
     // read, for two reasons (r13): (a) a REPIN's root read is
     // plan-equal to the displaced pin, so `.cache()` no-ops against the
     // old entry and the subsequent unpersist evicts it — leaving the
-    // "refreshed" pin uncached (default layout) or, under the hash
-    // layout, re-caching content CacheManager substituted from the
-    // STALE snapshot; (b) a file-list plan is never substituted into
-    // other readers' root reads, so one Via's pin no longer silently
-    // hijacks every other same-session reader of the store. The frozen
-    // file list IS the snapshot lineage the pin model wants.
+    // "refreshed" pin uncached; (b) a file-list plan is never
+    // substituted into other readers' root reads, so one Via's pin no
+    // longer silently hijacks every other same-session reader of the
+    // store. The frozen file list IS the snapshot lineage the pin model
+    // wants.
     val raw = liveTier2Read()
     val rawFiles = raw.inputFiles
-    val df = (if (clusterByHash && raw.columns.contains("rhythm_hash"))
-        raw.repartitionByRange(
-            org.apache.spark.sql.functions.col("rhythm_hash"))
-          .sortWithinPartitions("rhythm_hash")
-      else raw)
-      .cache()
+    val df = raw.cache()
     df.count()
     val displaced = pinLock.synchronized {
       val old = pinnedTier2
       pinnedTier2 = Some(df)
       pinnedFiles = rawFiles
-      pinnedLayoutHash = clusterByHash
       pinGen.incrementAndGet() // after the snapshot swap: see pinGen doc
       old
     }
@@ -144,14 +106,8 @@ final class Via(spark: SparkSession, warehouse: String,
     * before the repin. */
   @volatile private var pinnedFiles: Array[String] = Array.empty
 
-  /** Re-pin the snapshot over the store's current content, KEEPING the
-    * current pin's layout choice. */
-  def refreshServing(): Unit = pinServing(pinnedLayoutHash)
-
-  /** Layout of the current pin (false = scan order, true = hash-
-    * clustered) — exposed for specs pinning the repin-keeps-layout
-    * contract. */
-  private[graft] def servingLayoutHash: Boolean = pinnedLayoutHash
+  /** Re-pin the snapshot over the store's current content. */
+  def refreshServing(): Unit = pinServing()
 
   /** Drop the pin: serving calls read the store per call again. */
   def unpinServing(): Unit = {
@@ -367,6 +323,26 @@ final class Via(spark: SparkSession, warehouse: String,
 
   private def compactLedgeredStore(storePath: String, targetBytes: Long,
       skipOpenLeaf: Boolean): graft.sources.Layout.CompactionStats = {
+    val skips = ledgeredSkips(storePath, skipOpenLeaf)
+    graft.sources.Layout.compact(spark, storePath, targetBytes,
+      skipLeaf = skips.leaf, skipFile = skips.file)
+  }
+
+  /** Data files a ledgered-store compaction would rewrite — the count
+    * [[maintainIndexes]] weighs against its threshold. Same skip rules
+    * as the compaction itself, so files sitting only in Tier-1's open
+    * leaf never trigger a compaction that cannot touch them. */
+  private def ledgeredFiles(storePath: String, skipOpenLeaf: Boolean): Long = {
+    val skips = ledgeredSkips(storePath, skipOpenLeaf)
+    graft.sources.Layout.compactableFiles(spark, storePath,
+      skipLeaf = skips.leaf, skipFile = skips.file)
+  }
+
+  /** The open (lexically max) `dt` leaf when `skipOpenLeaf`, and `b<id>-`
+    * files above the commit ledger's high-water mark (see
+    * [[compactTier1]]). */
+  private def ledgeredSkips(storePath: String,
+      skipOpenLeaf: Boolean): Via.LedgeredSkips = {
     import org.apache.hadoop.fs.Path
     val root = new Path(storePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -377,9 +353,9 @@ final class Via(spark: SparkSession, warehouse: String,
       else None
     val committedMax = IngestPipeline.committedMax(fs, root)
     val UncommittedBatchFile = "b(\\d+)-.*".r
-    graft.sources.Layout.compact(spark, storePath, targetBytes,
-      skipLeaf = dir => openDt.contains(dir.getName),
-      skipFile = f => f.getName match {
+    Via.LedgeredSkips(
+      leaf = dir => openDt.contains(dir.getName),
+      file = f => f.getName match {
         case UncommittedBatchFile(id) => id.toLong > committedMax
         case _ => false
       })
@@ -509,9 +485,8 @@ final class Via(spark: SparkSession, warehouse: String,
         this
       }
     }
-    def compactIfFragmented(target: String, storePath: String,
+    def compactIfFragmented(target: String, n: Long,
         run: () => graft.sources.Layout.CompactionStats): Unit = {
-      val n = dataFiles(new Path(storePath))
       if (n > smallFileThreshold) {
         val s = run()
         acts += Via.Maintenance(target, "compact",
@@ -519,9 +494,11 @@ final class Via(spark: SparkSession, warehouse: String,
       } else acts += Via.Maintenance(target, "none", s"$n files")
     }
     if (fs.exists(new Path(tier1Path)))
-      compactIfFragmented("tier1", tier1Path, () => compactTier1(targetBytes))
+      compactIfFragmented("tier1", ledgeredFiles(tier1Path, skipOpenLeaf = true),
+        () => compactTier1(targetBytes))
     if (fs.exists(new Path(tier2Path)))
-      compactIfFragmented("tier2", tier2Path, () => compactTier2(targetBytes))
+      compactIfFragmented("tier2", ledgeredFiles(tier2Path, skipOpenLeaf = false),
+        () => compactTier2(targetBytes))
     // graph index: (1) DRIFT — the store carries keys the index has
     // never seen (a batch-promotion path that wrote Tier-2 without the
     // graph append, a crash between the two writes — ADVICE r11 medium):
@@ -591,11 +568,14 @@ final class Via(spark: SparkSession, warehouse: String,
           s"$levels batch levels: ${s.filesBefore} -> ${s.filesAfter} files")
       } else acts += Via.Maintenance("annidx", "none", s"$levels batch levels")
     }
-    dedupIndexPath.foreach(p => compactIfFragmented("dedupidx", p,
+    dedupIndexPath.foreach(p => compactIfFragmented("dedupidx",
+      dataFiles(new Path(p)),
       () => graft.search.DedupIndex.compact(spark, p, targetBytes)))
-    textIndexPath.foreach(p => compactIfFragmented("textidx", p,
+    textIndexPath.foreach(p => compactIfFragmented("textidx",
+      dataFiles(new Path(p)),
       () => graft.search.TextIndex.compact(spark, p, targetBytes)))
-    ivfIndexPath.foreach(p => compactIfFragmented("ivfidx", p,
+    ivfIndexPath.foreach(p => compactIfFragmented("ivfidx",
+      dataFiles(new Path(p)),
       () => graft.search.IvfIndex.compact(spark, p, targetBytes)))
     // a pinned serving snapshot's lineage is the parquet file list frozen
     // at pin time: once a maintenance action REWRITES TIER-2 (the
@@ -603,8 +583,7 @@ final class Via(spark: SparkSession, warehouse: String,
     // would recompute against deleted files and fail the serving call.
     // Only a tier2 rewrite creates that hazard — tier1 compaction and
     // index folds/syncs never touch the pinned store's files, so they do
-    // not pay a re-materialization (ADVICE r12). The repin keeps the
-    // pin's layout choice (refreshServing records it).
+    // not pay a re-materialization (ADVICE r12).
     // ALSO repin when any of the pin's frozen input files no longer
     // exists: a sweep that died between its tier2 rewrite and this repin
     // (VERDICT r13 item 6) reports tier2 "none" on the NEXT sweep — the
@@ -629,18 +608,19 @@ final class Via(spark: SparkSession, warehouse: String,
 
   // --- POST /analysis/tier2/clusters (V1/V6/A5/A6/J3/J4) --------------
   /** Text-filtered calls route through the Tier-2 graph ANN index when
-    * one exists and covers at least [[graphServeThreshold]] nodes (the
+    * one exists and covers at least `clustersServeThreshold` nodes (the
     * reference serves these through Qdrant's HNSW; exact scan below the
-    * crossover is OUR improvement on it). Identical filtering/scoring
-    * expressions either way; an under-filled indexed result falls back
-    * to the exact scan (ClusterSearch Scaladoc). */
+    * crossover is OUR improvement on it). The graph route ranks its hits
+    * on the driver with the exact verb's kernels (parity-pinned by
+    * TierServeSpec); an under-filled indexed result falls back to the
+    * exact scan (ClusterSearch Scaladoc). */
   def clusters(
       nowSec: Long,
       startTs: Option[Long] = None,
       endTs: Option[Long] = None,
       textFilter: Option[String] = None): DataFrame =
     textFilter match {
-      case Some(f) if graphServes(clustersGate) =>
+      case Some(f) if graphServes(clustersServeThreshold) =>
         ClusterSearch.clustersIndexed(tier2, graphIndexPath, Some(rules),
           nowSec, startTs, endTs, textFilter = f)
       case _ =>
@@ -650,7 +630,7 @@ final class Via(spark: SparkSession, warehouse: String,
 
   // --- POST /analysis/tier2/triage (V3/A7) ----------------------------
   def triage(positive: Seq[String], negative: Seq[String]): DataFrame =
-    if (graphServes(triageGate)) {
+    if (graphServes(triageServeThreshold)) {
       // pinned serving memoizes the example vector (pure function of the
       // frozen snapshot; memo cleared on every pin transition)
       // generation read FIRST: the snapshot the compute reads is then
@@ -673,8 +653,8 @@ final class Via(spark: SparkSession, warehouse: String,
       .exists(_ >= threshold)
   /** Routing decisions exposed for specs (gate semantics, not parity —
     * parity is TierServeSpec's job). */
-  private[graft] def clustersServesViaGraph: Boolean = graphServes(clustersGate)
-  private[graft] def triageServesViaGraph: Boolean = graphServes(triageGate)
+  private[graft] def clustersServesViaGraph: Boolean = graphServes(clustersServeThreshold)
+  private[graft] def triageServesViaGraph: Boolean = graphServes(triageServeThreshold)
 
   /** Bulk-(re)build the Tier-2 serving graph index from the current
     * store — the initial build; [[startStreamingPromotion]] keeps it
@@ -728,9 +708,6 @@ object Via {
     * SCALE.md r13). Routing BOTH verbs at 100k made triage pay up to
     * ~1.5× in the 100k-600k band (VERDICT r12 item 2). */
   val TriageServeThreshold = 300000L
-  /** Pre-r13 shared gate, kept for callers that want one explicit
-    * threshold for both verbs (benches forcing a path). */
-  val GraphServeThreshold = 100000L
   /** Initial `tail` probe window (seconds of event time before the
     * store's newest row). Sized so a reference-rate stream (100 logs/s,
     * BASELINE.md) fills the default n=100 on the first probe with ~64×
@@ -749,6 +726,12 @@ object Via {
     * each segment adds one beam walk per probe, so unbounded segment
     * growth would trade fold cost for serving latency. */
   val MaintainMaxSegments = 16
+
+  /** [[graft.sources.Layout.compact]]'s leaf and file skip rules for one
+    * ledgered store. */
+  private final case class LedgeredSkips(
+      leaf: org.apache.hadoop.fs.Path => Boolean,
+      file: org.apache.hadoop.fs.Path => Boolean)
 
   /** One maintenance decision: which store, what ran, why. */
   final case class Maintenance(target: String, action: String, detail: String)

@@ -36,11 +36,6 @@ case class TopKPerGroupNode(
 }
 
 object TopKPerGroupStrategy extends SparkStrategy {
-  /** Set to `true` to plan the sort-based exec (O(k) memory per partition,
-    * sort spill handled by Spark's external sorter) instead of the default
-    * hash exec (no sort, bounded by [[GroupBudgetKey]] via auto-spill). */
-  val SortBasedKey = "spark.graft.topKPerGroup.sortBased"
-
   /** Max distinct groups held in the hash exec's in-memory map per
     * partition before it spills a key-sorted run to disk (see the exec's
     * memory contract). */
@@ -49,31 +44,27 @@ object TopKPerGroupStrategy extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroupNode(group, order, k, child) =>
-      val conf = org.apache.spark.sql.SparkSession.getActiveSession.map(_.conf)
-      val sortBased = conf.exists(_.get(SortBasedKey, "false").toBoolean)
-      val budget = conf.map(_.get(GroupBudgetKey, DefaultGroupBudget.toString).toInt)
+      val budget = org.apache.spark.sql.SparkSession.getActiveSession
+        .map(_.conf.get(GroupBudgetKey, DefaultGroupBudget.toString).toInt)
         .getOrElse(DefaultGroupBudget)
-      TopKPerGroupExec(group, order, k, planLater(child), sortBased, budget) :: Nil
+      TopKPerGroupExec(group, order, k, planLater(child), budget) :: Nil
     case _ => Nil
   }
 }
 
-/** MEMORY CONTRACT: the default (hash) mode holds at most
+/** MEMORY CONTRACT: the exec holds at most
   * k · min(|distinct groups in the partition|, groupBudget) row copies
   * plus one UnsafeRow key per held group — NEVER proportional to input
   * rows, and since round 4 never proportional to group cardinality
   * either: when the map exceeds `groupBudget` groups it is flushed to
   * disk as a run sorted by group-key bytes, and the partition output is a
   * streaming merge of all runs (exact, because per-span top-k's merge to
-  * the span-union's top-k — top-k is a semigroup). The explicit
-  * [[TopKPerGroupStrategy.SortBasedKey]] mode remains for callers that
-  * prefer Spark's external group-key sort over operator-local spills. */
+  * the span-union's top-k — top-k is a semigroup). */
 case class TopKPerGroupExec(
     groupExprs: Seq[Expression],
     ordering: Seq[SortOrder],
     k: Int,
     child: SparkPlan,
-    sortBased: Boolean = false,
     groupBudget: Int = TopKPerGroupStrategy.DefaultGroupBudget) extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
@@ -87,21 +78,12 @@ case class TopKPerGroupExec(
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(groupExprs) :: Nil
 
-  /** Sort-based mode additionally asks for group-key order, making the
-    * per-group scan streaming (spillable sort instead of a hash map). */
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    if (sortBased)
-      Seq(groupExprs.map(SortOrder(_,
-        org.apache.spark.sql.catalyst.expressions.Ascending)))
-    else Seq(Nil)
-
   override protected def doExecute(): RDD[InternalRow] = {
     import TopKPerGroupExec.insert
     val groupE = groupExprs
     val orderE = ordering
     val limit = k
     val childOutput = child.output
-    val sorted = sortBased
     val budget = groupBudget
     val spillBytes = longMetric("spillBytes")
     val spillCount = longMetric("spillCount")
@@ -109,86 +91,58 @@ case class TopKPerGroupExec(
       val keyProj = UnsafeProjection.create(groupE, childOutput)
       val ord = RowOrdering.create(orderE, childOutput)
       import scala.jdk.CollectionConverters._
-      if (sorted) {
-        // child is sorted by group key: stream group runs, O(k) memory
-        new Iterator[InternalRow] {
-          private var curKey: UnsafeRow = _
-          private val buf = new java.util.ArrayList[InternalRow](limit)
-          private var out: Iterator[InternalRow] = Iterator.empty
-          private def advance(): Unit = {
-            while (!out.hasNext && iter.hasNext) {
-              val row = iter.next()
-              val key = keyProj(row)
-              if (curKey == null) curKey = key.copy()
-              else if (key != curKey) {
-                out = new java.util.ArrayList(buf).asScala.iterator
-                buf.clear()
-                curKey = key.copy()
-              }
-              insert(buf, row, ord, limit)
-            }
-            if (!out.hasNext && !iter.hasNext && !buf.isEmpty) {
-              out = new java.util.ArrayList(buf).asScala.iterator
-              buf.clear()
-            }
+      // group key -> k best rows; map bounded at `budget` DISTINCT
+      // groups — past it, the map is flushed as a key-sorted disk run
+      // and the output becomes a streaming merge of runs + the final map
+      // (see the class-level memory contract)
+      val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
+      val spills = new java.util.ArrayList[java.io.File]()
+      val buffers = new java.util.HashMap[UnsafeRow, java.util.ArrayList[InternalRow]]()
+
+      def spillRun(): Unit = {
+        val entries = buffers.entrySet().asScala.toArray
+          .sortWith((a, b) => java.util.Arrays.compareUnsigned(
+            a.getKey.getBytes, b.getKey.getBytes) < 0)
+        // spill under spark.local.dir (DiskBlockManager), never /tmp
+        val f = org.apache.spark.graftbridge.SpillFiles.create("graft-topk-spill")
+        val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+          new java.io.FileOutputStream(f), 1 << 16))
+        try entries.foreach { e =>
+          val kb = e.getKey.getBytes
+          out.writeInt(kb.length); out.write(kb)
+          out.writeInt(e.getValue.size())
+          e.getValue.asScala.foreach { r =>
+            val bytes = toUnsafe(r).getBytes
+            out.writeInt(bytes.length); out.write(bytes)
           }
-          override def hasNext: Boolean = { advance(); out.hasNext }
-          override def next(): InternalRow = { advance(); out.next() }
+        } finally out.close()
+        spillBytes.add(f.length())
+        spillCount.add(1)
+        spills.add(f)
+        buffers.clear()
+      }
+
+      Option(org.apache.spark.TaskContext.get()).foreach(
+        _.addTaskCompletionListener[Unit](_ => spills.asScala.foreach(_.delete())))
+
+      while (iter.hasNext) {
+        val row = iter.next()
+        val key = keyProj(row)
+        var buf = buffers.get(key)
+        if (buf == null) {
+          if (buffers.size() >= budget) spillRun()
+          buf = new java.util.ArrayList[InternalRow](limit)
+          buffers.put(key.copy(), buf)
         }
+        insert(buf, row, ord, limit)
+      }
+
+      if (spills.isEmpty) {
+        buffers.values().asScala.iterator.flatMap(_.asScala)
       } else {
-        // group key -> k best rows; map bounded at `budget` DISTINCT
-        // groups — past it, the map is flushed as a key-sorted disk run
-        // and the output becomes a streaming merge of runs + the final map
-        // (see the class-level memory contract)
-        val toUnsafe = UnsafeProjection.create(childOutput, childOutput)
-        val spills = new java.util.ArrayList[java.io.File]()
-        val buffers = new java.util.HashMap[UnsafeRow, java.util.ArrayList[InternalRow]]()
-
-        def spillRun(): Unit = {
-          val entries = buffers.entrySet().asScala.toArray
-            .sortWith((a, b) => java.util.Arrays.compareUnsigned(
-              a.getKey.getBytes, b.getKey.getBytes) < 0)
-          // spill under spark.local.dir (DiskBlockManager), never /tmp
-          val f = org.apache.spark.graftbridge.SpillFiles.create("graft-topk-spill")
-          val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-            new java.io.FileOutputStream(f), 1 << 16))
-          try entries.foreach { e =>
-            val kb = e.getKey.getBytes
-            out.writeInt(kb.length); out.write(kb)
-            out.writeInt(e.getValue.size())
-            e.getValue.asScala.foreach { r =>
-              val bytes = toUnsafe(r).getBytes
-              out.writeInt(bytes.length); out.write(bytes)
-            }
-          } finally out.close()
-          spillBytes.add(f.length())
-          spillCount.add(1)
-          spills.add(f)
-          buffers.clear()
-        }
-
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => spills.asScala.foreach(_.delete())))
-
-        while (iter.hasNext) {
-          val row = iter.next()
-          val key = keyProj(row)
-          var buf = buffers.get(key)
-          if (buf == null) {
-            if (buffers.size() >= budget) spillRun()
-            buf = new java.util.ArrayList[InternalRow](limit)
-            buffers.put(key.copy(), buf)
-          }
-          insert(buf, row, ord, limit)
-        }
-
-        if (spills.isEmpty) {
-          buffers.values().asScala.iterator.flatMap(_.asScala)
-        } else {
-          spillRun() // flush the tail so everything merges uniformly
-          TopKPerGroupExec.mergeRuns(
-            spills.asScala.toSeq, childOutput.length, ord, limit)
-        }
+        spillRun() // flush the tail so everything merges uniformly
+        TopKPerGroupExec.mergeRuns(
+          spills.asScala.toSeq, childOutput.length, ord, limit)
       }
     }, preservesPartitioning = true)
   }

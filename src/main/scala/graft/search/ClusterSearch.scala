@@ -29,19 +29,6 @@ object ClusterSearch {
   val GroupLimit = 100
   val TriageLimit = 50
 
-  /** Per-stage serving latency trace (SPARK_GRAFT_SERVE_TRACE=1): names
-    * where an indexed probe's milliseconds go — the attribution tool for
-    * serving-floor work, not a hot-path feature. */
-  private val traceOn = sys.env.get("SPARK_GRAFT_SERVE_TRACE").contains("1")
-  private def traced[T](tag: String)(f: => T): T =
-    if (!traceOn) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[serve-trace] $tag: ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-      r
-    }
-
   /** A5/A6/V1/V6/P7/P8/J3/J4 — grouped cluster search over Tier-2. */
   def clusters(
       tier2: DataFrame,
@@ -53,10 +40,10 @@ object ClusterSearch {
       limit: Int = GroupLimit): DataFrame =
     clustersPipeline(tier2, rules, nowSec, startTs, endTs, textFilter, limit)
 
-  /** The exact clusters pipeline over an arbitrary Tier-2-shaped
-    * relation — shared verbatim by the exact verb (rel = whole store)
-    * and the graph-accelerated verb (rel = candidate rows), so the two
-    * paths cannot diverge in filtering, scoring, or ordering. */
+  /** The exact clusters pipeline over a Tier-2-shaped relation — the
+    * exact verb and the graph verb's shortfall fallback (rel = whole
+    * store), and the reference the graph verb's driver ranker is
+    * parity-pinned against (TierServeSpec). */
   private def clustersPipeline(
       rel: DataFrame,
       rules: Option[Rules],
@@ -152,11 +139,9 @@ object ClusterSearch {
       .select(zip_with($"pv", $"nv", (p, n) => p * 2.0 - n).as("qv"))
   }
 
-  /** The exact triage rank/score/project stage over an arbitrary
-    * Tier-2-shaped relation carrying the query vector as `qvCol` —
-    * shared by the exact verb (whole store × broadcast qv) and the
-    * graph-accelerated verb (candidate rows × collected qv), so the two
-    * paths score and order identically by construction. */
+  /** The exact triage rank/score/project stage over a Tier-2-shaped
+    * relation carrying the query vector as `qvCol` — the exact verb's
+    * two forms (collected qv, broadcast aggregate qv) share it. */
   private def triageRank(rel: DataFrame, qvCol: org.apache.spark.sql.Column,
       excludeHashes: Seq[String], limit: Int): DataFrame =
     rel.filter(!col("rhythm_hash").isin(excludeHashes: _*))
@@ -170,9 +155,9 @@ object ClusterSearch {
   // Graph-accelerated serving (VERDICT r10 #1): candidates come from a
   // beam walk over the persisted Tier-2 graph index
   // (GraphIndex.probeCached — executor-resident, ~10% of nodes visited
-  // at 100k+ vectors) instead of an exact corpus scan; payload and
-  // scores come from joining the bounded candidate set back to Tier-2
-  // and running the SAME pipeline stages as the exact verbs. This
+  // at 100k+ vectors) instead of an exact corpus scan; each hit carries
+  // its row's payload, and the driver ranker below scores and orders
+  // the bounded hit set exactly as the exact verbs would. This
   // mirrors the reference, which serves every Tier-2 query through
   // Qdrant's HNSW (`qdrant_service.py:73-95`) — including its
   // approximation: a filtered search can miss a row whose score is
@@ -190,57 +175,24 @@ object ClusterSearch {
   private def serveEf(candidateK: Int): Int =
     math.max(GraphIndex.EfSearch, candidateK / GraphIndex.NumParts + 32)
 
-  /** Tier-2-shaped candidate relation for one serving probe: the graph's
-    * top-k hits rebuilt FROM THEIR OWN PAYLOADS — O(k) rows collected
-    * with the walk, zero corpus rejoin (the r11 weak-mark fix; Qdrant's
-    * hit-with-payload model). `dense` is the node embedding cast back to
-    * the store's float type, so downstream scoring is value-identical to
-    * the exact verbs (float→double→float is exact). A store whose nodes
-    * predate the payload column falls back to the r10 recovery shape:
-    * rowKey over the corpus + broadcast semi-join. */
-  private def candidateRows(tier2: DataFrame, graphPath: String,
-      qv: Seq[Double], k: Int): DataFrame = {
-    val hits = traced("graph_walk")(GraphIndex.servingHits(
-      tier2.sparkSession, graphPath, qv, k, serveEf(k)))
-    candidateRowsFromHits(tier2, hits)
-  }
-
-  /** [[candidateRows]] over an already-collected hit set. */
-  private def candidateRowsFromHits(tier2: DataFrame,
-      hits: Seq[GraphIndex.ServingHit]): DataFrame = {
-    val spark = tier2.sparkSession
-    import spark.implicits._
-    if (hits.nonEmpty && hits.forall(_.payload != null))
-      spark.createDataset(hits).toDF()
-        .select(from_json(col("payload"), TierIndex.payloadSchema).as("p"),
-          col("embedding").cast("array<float>").as("dense"))
-        .select(TierIndex.PayloadFields.map(f => col(s"p.$f")) :+
-          col("dense"): _*)
-    else {
-      val cands = hits.map(_.vec_id).toDF("__vec_id")
-      tier2.withColumn("__vec_id", TierIndex.rowKey)
-        .join(broadcast(cands), "__vec_id").drop("__vec_id")
-    }
-  }
-
   // -------------------------------------------------------------------
-  // Driver-side candidate ranking — the serving fast path (VERDICT r15
-  // item 6). A graph probe's candidates are already O(k) rows ON THE
-  // DRIVER (ServingHit payload + embedding — Qdrant's hit-with-payload
-  // model); pushing them back through a Catalyst pipeline cost 2 jobs +
-  // planning per call (~160 ms of the ~275 ms p50 at 150k rows) just to
-  // process ~400 rows. The ranker applies the IDENTICAL stages in-JVM:
-  // every predicate/score calls the same static kernel the Catalyst
-  // expression compiles to (ContainsAllTokens.compute; the CosineSimExpr
-  // fold over the same float-cast values; java BigDecimal HALF_UP like
-  // Catalyst Round), null handling mirrors the column semantics case by
-  // case (noted inline), and the orderings replicate TopKPerGroup /
-  // TakeOrdered key order — parity is pinned by TierServeSpec (indexed
-  // == exact on every fixture, including rules and range filters).
-  // `spark.graft.serveDriverRank=false` routes back through the Catalyst
-  // candidate pipeline. Shortfall semantics unchanged: fewer than
-  // `limit` survivors falls back to the exact whole-store scan. At any
-  // corpus size the ranked set stays O(k), so driver ranking is
+  // Driver-side candidate ranking — the only graph serving route
+  // (VERDICT r15 item 6). A graph probe's candidates are already O(k)
+  // rows ON THE DRIVER (ServingHit payload + embedding — Qdrant's
+  // hit-with-payload model); pushing them back through a Catalyst
+  // pipeline cost 2 jobs + planning per call (~160 ms of the ~275 ms
+  // p50 at 150k rows) just to process ~400 rows. The ranker applies the
+  // IDENTICAL stages in-JVM: every predicate/score calls the same static
+  // kernel the Catalyst expression compiles to
+  // (ContainsAllTokens.compute; the CosineSimExpr fold over the same
+  // float-cast values; java BigDecimal HALF_UP like Catalyst Round), null
+  // handling mirrors the column semantics case by case (noted inline),
+  // and the orderings replicate TopKPerGroup / TakeOrdered key order —
+  // parity is pinned by TierServeSpec (indexed == exact on every
+  // fixture, including rules and range filters). Fewer than `limit`
+  // survivors — or hits without payloads (a graph built before payloads
+  // existed) — fall back to the exact whole-store scan. At any corpus
+  // size the ranked set stays O(k), so driver ranking is
   // scale-independent by construction.
   // -------------------------------------------------------------------
 
@@ -254,9 +206,9 @@ object ClusterSearch {
 
   /** ServingHit → ranked-candidate row. The payload is the to_json of
     * TierIndex.PayloadFields (flat strings + longs), so a Jackson walk
-    * decodes exactly what from_json(payloadSchema) decodes; the hit
-    * embedding is already the store's float dtype (ServingHit contract —
-    * same values the Spark path's array<float> cast produces). */
+    * recovers every field value-exactly; the hit embedding is already
+    * the store's float dtype (ServingHit contract — the same values the
+    * exact verbs read from `dense`). */
   private def parseCand(h: GraphIndex.ServingHit): Cand = {
     val node = payloadMapper.readTree(h.payload)
     def s(f: String): String = {
@@ -331,8 +283,7 @@ object ClusterSearch {
       startTs: Option[Long], endTs: Option[Long], textFilter: String,
       limit: Int): Seq[org.apache.spark.sql.Row] = {
     val qTokens = textFilter.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-    val qEmb = traced("rank_embed")(
-      graft.functions.EmbedText.embedString(textFilter))
+    val qEmb = graft.functions.EmbedText.embedString(textFilter)
     val scored = cands.iterator
       // range filters: a NULL start_ts fails a bounded comparison (drops)
       // and passes the unbounded lit(true), like the column predicates
@@ -418,9 +369,6 @@ object ClusterSearch {
     StructField("body", StringType), StructField("count", LongType),
     StructField("start_ts", LongType), StructField("score", DoubleType)))
 
-  private def driverRankOn(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.get("spark.graft.serveDriverRank", "true").toBoolean
-
   /** Graph-accelerated [[clusters]] (text-filtered form only — without a
     * text filter there is no query vector and nothing to probe). */
   def clustersIndexed(
@@ -436,7 +384,7 @@ object ClusterSearch {
       textFilter, limit)._1
 
   /** Returns (result, servedViaGraph) — the flag is false when the
-    * shortfall fallback ran the exact scan instead. */
+    * exact-scan fallback ran instead (shortfall, or payload-less hits). */
   private[graft] def clustersIndexedImpl(
       tier2: DataFrame,
       graphPath: String,
@@ -447,39 +395,22 @@ object ClusterSearch {
       textFilter: String,
       limit: Int): (DataFrame, Boolean) = {
     val spark = tier2.sparkSession
-    import spark.implicits._
     // the same embedding kernel the in-plan expression runs
     val qv = graft.functions.EmbedText.embedString(textFilter)
       .map(_.toDouble).toSeq
     val k = candidateKFor(limit)
-    val hits = traced("graph_walk")(
-      GraphIndex.servingHits(spark, graphPath, qv, k, serveEf(k)))
-    if (driverRankOn(spark) && hits.nonEmpty && hits.forall(_.payload != null)) {
-      // serving fast path: rank the k driver-resident candidates in-JVM
-      val active = traced("rules_load")(
-        rules.fold(Set.empty[String])(_.activeHashes(nowSec)))
-      val cands = traced("parse_cands")(hits.map(parseCand))
-      val rows = traced("driver_rank")(rankClustersDriver(
-        cands, active, startTs, endTs, textFilter, limit))
-      if (rows.length < limit)
-        (clustersPipeline(tier2, rules, nowSec, startTs, endTs,
-          Some(textFilter), limit), false)
-      else
-        (spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), ClustersOutSchema), true)
-    } else {
-      val candRows = traced("candidate_rows")(
-        candidateRowsFromHits(tier2, hits))
-      val out = traced("pipeline_plan")(clustersPipeline(candRows, rules,
-        nowSec, startTs, endTs, Some(textFilter), limit))
-      val rows = traced("pipeline_exec")(out.collect())
-      if (rows.length < limit)
-        (clustersPipeline(tier2, rules, nowSec, startTs, endTs,
-          Some(textFilter), limit), false)
-      else
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema),
-          true)
-    }
+    val hits = GraphIndex.servingHits(spark, graphPath, qv, k, serveEf(k))
+    val rows =
+      if (hits.isEmpty || hits.exists(_.payload == null)) Seq.empty
+      else rankClustersDriver(hits.map(parseCand),
+        rules.fold(Set.empty[String])(_.activeHashes(nowSec)),
+        startTs, endTs, textFilter, limit)
+    if (rows.length < limit)
+      (clustersPipeline(tier2, rules, nowSec, startTs, endTs,
+        Some(textFilter), limit), false)
+    else
+      (spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), ClustersOutSchema), true)
   }
 
   /** Graph-accelerated [[triage]]. */
@@ -556,36 +487,23 @@ object ClusterSearch {
       limit: Int,
       precomputedQv: Option[Option[Seq[Double]]] = None): (DataFrame, Boolean) = {
     val spark = tier2.sparkSession
-    val qvOpt = precomputedQv.getOrElse(traced("example_vector")(
-      exampleVectorFast(tier2, positiveHashes, negativeHashes)))
+    val qvOpt = precomputedQv.getOrElse(
+      exampleVectorFast(tier2, positiveHashes, negativeHashes))
     if (qvOpt.isEmpty)
       // degenerate examples (absent hashes): keep the exact verb's
       // semantics for the edge verbatim
       return (triage(tier2, positiveHashes, negativeHashes, limit), false)
     val qv = qvOpt.get
-    import spark.implicits._
     val k = candidateKFor(limit) + positiveHashes.size + negativeHashes.size
-    val hits = traced("graph_walk")(GraphIndex.servingHits(
-      spark, graphPath, qv, k, serveEf(k)))
-    if (driverRankOn(spark) && hits.nonEmpty && hits.forall(_.payload != null)) {
-      val rows = traced("driver_rank")(rankTriageDriver(hits.map(parseCand),
-        (positiveHashes ++ negativeHashes).toSet, qv, limit))
-      if (rows.length < limit)
-        (triage(tier2, positiveHashes, negativeHashes, limit), false)
-      else
-        (spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), TriageOutSchema), true)
-    } else {
-      val candRows = traced("candidate_rows")(
-        candidateRowsFromHits(tier2, hits))
-      val out = triageRank(candRows, typedLit(qv),
-        positiveHashes ++ negativeHashes, limit)
-      val rows = traced("pipeline_exec")(out.collect())
-      if (rows.length < limit)
-        (triage(tier2, positiveHashes, negativeHashes, limit), false)
-      else
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema),
-          true)
-    }
+    val hits = GraphIndex.servingHits(spark, graphPath, qv, k, serveEf(k))
+    val rows =
+      if (hits.isEmpty || hits.exists(_.payload == null)) Seq.empty
+      else rankTriageDriver(hits.map(parseCand),
+        (positiveHashes ++ negativeHashes).toSet, qv, limit)
+    if (rows.length < limit)
+      (triage(tier2, positiveHashes, negativeHashes, limit), false)
+    else
+      (spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), TriageOutSchema), true)
   }
 }

@@ -12,12 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Design: the graph is keyed by a 64-bit ROW key (a Tier-2 row is one
   * promoted (hash, window) cluster — `xxhash64` of its identity
-  * columns), carries no payload beyond the dense vector, and probe hits
-  * join back to Tier-2 to recover payload and be re-scored by the SAME
-  * expressions the exact verbs use — so the graph only ever influences
-  * WHICH rows are candidates, never how they score or order. A key
-  * collision (~2^-64 per pair) merely merges two rows' candidacy; the
-  * join + exact rescore keeps both rows correct.
+  * columns) and carries each row's serving projection as its payload,
+  * so a probe hit IS the row; `ClusterSearch`'s driver ranker re-scores
+  * hits with the exact verbs' kernels — the graph only ever influences
+  * WHICH rows are candidates, never how they score or order.
   *
   * Freshness: [[appendBatch]] is wired into the streaming promotion sink
   * per committed micro-batch (idempotent — replay-safe via the batch_id
@@ -42,15 +40,6 @@ object TierIndex {
   val PayloadFields: Seq[String] = Seq("rhythm_hash", "anomaly_type",
     "anomaly_context", "start_ts", "end_ts", "count", "service",
     "severity", "body", "dt")
-
-  /** Schema the serving verbs decode the payload back with. */
-  val payloadSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(PayloadFields.map {
-      case f @ ("start_ts" | "end_ts" | "count") => StructField(f, LongType)
-      case f => StructField(f, StringType)
-    })
-  }
 
   /** Graph node rows for a Tier-2 relation (or one freshly promoted
     * micro-batch): (vec_id, label, embedding, payload). The label slot

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Physical-layout levers for the warehouse path: bucketing for
@@ -128,8 +129,6 @@ object Layout {
           "present); its sink log pins file names, so compaction would " +
           "lose logged files and break log-resolved reads. Re-materialize " +
           "the store with a batch write instead.")
-    def isData(p: Path): Boolean =
-      !p.getName.startsWith(".") && !p.getName.startsWith("_")
     val Trash = "_compact-(.+)\\.old".r
     // Trash names must contain NO '=': Spark's hidden-path filter skips
     // underscore-prefixed names UNLESS they contain '=' (kept visible to
@@ -244,18 +243,11 @@ object Layout {
         }
       }
     recover(root)
-    def leaves(dir: Path): Seq[Path] = {
-      val entries = fs.listStatus(dir).filter(s => isData(s.getPath))
-      val subdirs = entries.filter(_.isDirectory)
-      if (subdirs.isEmpty) {
-        if (entries.exists(_.isFile)) Seq(dir) else Seq.empty
-      } else subdirs.flatMap(s => leaves(s.getPath)).toSeq
-    }
     var before = 0L
     var after = 0L
     var compacted = 0
     var skipped = 0
-    leaves(root).foreach { dir =>
+    leaves(fs, root).foreach { dir =>
       if (skipLeaf(dir)) skipped += 1
       else {
         // skipFile excludes a file from the rewrite SNAPSHOT entirely: it
@@ -265,8 +257,7 @@ object Layout {
         // still delete-by-name (an ingest replay's uncommitted `b<id>-`
         // leftovers) — folding those into a rewrite would strand rows the
         // protocol believes it removed.
-        def dataFiles() = fs.listStatus(dir)
-          .filter(s => s.isFile && isData(s.getPath) && !skipFile(s.getPath))
+        def dataFiles() = leafFiles(fs, dir, skipFile)
         val files = dataFiles()
         val bytes = files.map(_.getLen).sum
         val want = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong)
@@ -355,4 +346,36 @@ object Layout {
     }
     CompactionStats(compacted, before, after, skipped, recovered)
   }
+
+  /** The data files [[compact]] would consider under `path` with the same
+    * `skipLeaf`/`skipFile` rules — its `filesBefore`. A caller deciding
+    * WHETHER to compact counts with this, so the count and the action
+    * cannot disagree about files compaction never touches. */
+  def compactableFiles(spark: org.apache.spark.sql.SparkSession, path: String,
+      skipLeaf: Path => Boolean = _ => false,
+      skipFile: Path => Boolean = _ => false): Long = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) 0L
+    else leaves(fs, root).filterNot(skipLeaf)
+      .map(leafFiles(fs, _, skipFile).length.toLong).sum
+  }
+
+  private def isData(p: Path): Boolean =
+    !p.getName.startsWith(".") && !p.getName.startsWith("_")
+
+  /** Leaf directories holding data files (files beside subdirectories
+    * are not a leaf's and are never compacted). */
+  private def leaves(fs: FileSystem, dir: Path): Seq[Path] = {
+    val entries = fs.listStatus(dir).filter(s => isData(s.getPath))
+    val subdirs = entries.filter(_.isDirectory)
+    if (subdirs.isEmpty) {
+      if (entries.exists(_.isFile)) Seq(dir) else Seq.empty
+    } else subdirs.flatMap(s => leaves(fs, s.getPath)).toSeq
+  }
+
+  private def leafFiles(fs: FileSystem, dir: Path,
+      skipFile: Path => Boolean): Array[FileStatus] =
+    fs.listStatus(dir)
+      .filter(s => s.isFile && isData(s.getPath) && !skipFile(s.getPath))
 }

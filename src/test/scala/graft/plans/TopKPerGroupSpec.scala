@@ -52,23 +52,6 @@ class TopKPerGroupSpec extends SparkSpec {
     assert(!plan.contains("Sort "), s"no per-partition sort expected:\n${plan.take(600)}")
   }
 
-  test("sort-based mode (ultra-high-cardinality fallback) matches hash mode") {
-    import spark.implicits._
-    val df = fixture
-    val hash = TopKPerGroup(df, Seq("grp"), Seq(("score", false), ("id", true)), 3)
-      .collect().map(r => (r.getString(0), r.getLong(1))).sorted
-    spark.conf.set(TopKPerGroupStrategy.SortBasedKey, "true")
-    try {
-      val sortDf = TopKPerGroup(df, Seq("grp"), Seq(("score", false), ("id", true)), 3)
-      val sorted = sortDf
-        .collect().map(r => (r.getString(0), r.getLong(1))).sorted
-      assert(sorted.sameElements(hash))
-      // the spillable group sort must actually be in the plan
-      val plan = sortDf.queryExecution.executedPlan.toString
-      assert(plan.contains("Sort "), s"expected group-key sort:\n${plan.take(600)}")
-    } finally spark.conf.unset(TopKPerGroupStrategy.SortBasedKey)
-  }
-
   test("hash mode auto-spills past the group budget and stays exact (no flag)") {
     import spark.implicits._
     // 5000 distinct groups vs a budget of 100 forces many spill runs per

@@ -48,37 +48,6 @@ class TierServeSpec extends SparkSpec {
     t2.unpersist()
   }
 
-  test("driver ranker and Catalyst candidate pipeline produce IDENTICAL rows") {
-    // the serving fast path (spark.graft.serveDriverRank, default on)
-    // ranks the k collected candidates in-JVM; flipping the conf routes
-    // the SAME hits through the Catalyst pipeline — both must match the
-    // exact verb row for row, including scores (shared kernel arithmetic)
-    val t2 = tier2Fixture(600).cache(); t2.count()
-    val gpath = java.nio.file.Files.createTempDirectory("drvrank").toString + "/g"
-    TierIndex.build(t2, gpath)
-    val now = 1700000000L + 700 * 60
-    val pos = Seq("h3", "h17"); val neg = Seq("h40")
-    def runBoth[T](f: => T): (T, T) = {
-      spark.conf.set("spark.graft.serveDriverRank", "true")
-      val fast = f
-      spark.conf.set("spark.graft.serveDriverRank", "false")
-      val slow = try f finally spark.conf.unset("spark.graft.serveDriverRank")
-      (fast, slow)
-    }
-    val (cFast, cSlow) = runBoth(rowStrs(ClusterSearch.clustersIndexedImpl(
-      t2, gpath, None, now, None, None, "failed user", limit = 10)._1))
-    val cExact = rowStrs(ClusterSearch.clusters(t2, None, now,
-      textFilter = Some("failed user"), limit = 10))
-    assert(cFast == cSlow, s"clusters fast != pipeline:\n$cFast\n$cSlow")
-    assert(cFast == cExact, "clusters fast != exact")
-    val (tFast, tSlow) = runBoth(rowStrs(ClusterSearch.triageIndexedImpl(
-      t2, gpath, pos, neg, limit = 10)._1))
-    val tExact = rowStrs(ClusterSearch.triage(t2, pos, neg, limit = 10))
-    assert(tFast == tSlow, s"triage fast != pipeline:\n$tFast\n$tSlow")
-    assert(tFast == tExact, "triage fast != exact")
-    t2.unpersist()
-  }
-
   test("clustersIndexed == clusters on the gate fixture (graph-served)") {
     val t2 = tier2Fixture(600).cache(); t2.count()
     val gpath = java.nio.file.Files.createTempDirectory("cserve").toString + "/g"
@@ -168,6 +137,26 @@ class TierServeSpec extends SparkSpec {
     t2.unpersist()
   }
 
+  test("a graph without payloads falls back to the exact scan") {
+    // nodes built before the payload column existed: the driver ranker
+    // has no rows to rank, so both verbs must take the exact fallback
+    val t2 = tier2Fixture(600).cache(); t2.count()
+    val gpath = java.nio.file.Files.createTempDirectory("nopay").toString + "/g"
+    GraphIndex.build(TierIndex.nodes(t2).drop("payload"), gpath)
+    val now = 1700000000L + 700 * 60
+    val (cDf, cServed) = ClusterSearch.clustersIndexedImpl(t2, gpath, None,
+      now, None, None, textFilter = "failed user", limit = 10)
+    assert(!cServed, "payload-less hits cannot be graph-served")
+    assert(rowStrs(cDf) == rowStrs(ClusterSearch.clusters(t2, None, now,
+      textFilter = Some("failed user"), limit = 10)))
+    val pos = Seq("h3", "h17"); val neg = Seq("h40")
+    val (tDf, tServed) = ClusterSearch.triageIndexedImpl(t2, gpath, pos, neg,
+      limit = 10)
+    assert(!tServed, "payload-less hits cannot be graph-served")
+    assert(rowStrs(tDf) == rowStrs(ClusterSearch.triage(t2, pos, neg, limit = 10)))
+    t2.unpersist()
+  }
+
   test("triage (fast example vector) == the aggregate-form reference") {
     val t2 = tier2Fixture(300).cache(); t2.count()
     def strs(df: DataFrame) = rowStrs(df)
@@ -191,7 +180,8 @@ class TierServeSpec extends SparkSpec {
     val t2 = tier2Fixture(600)
     t2.write.partitionBy("dt").parquet(s"$wh/tier2")
     val viaExact = new Via(spark, wh) // default threshold: exact path
-    val viaGraph = new Via(spark, wh, graphServeThreshold = 1L)
+    val viaGraph = new Via(spark, wh,
+      clustersServeThreshold = 1L, triageServeThreshold = 1L)
     viaGraph.buildGraphIndex()
     val now = 1700000000L + 700 * 60
     assert(rowStrs(viaGraph.clusters(now, textFilter = Some("failed user"))) ==
@@ -215,20 +205,17 @@ class TierServeSpec extends SparkSpec {
     assert(viaSplit.clustersServesViaGraph && !viaSplit.triageServesViaGraph)
     // defaults: both measured thresholds sit above this store
     val viaDef = new Via(spark, wh)
-    assert(viaDef.clustersGate == Via.ClustersServeThreshold &&
-      viaDef.triageGate == Via.TriageServeThreshold)
+    assert(viaDef.clustersServeThreshold == Via.ClustersServeThreshold &&
+      viaDef.triageServeThreshold == Via.TriageServeThreshold)
     assert(!viaDef.clustersServesViaGraph && !viaDef.triageServesViaGraph)
-    // an explicit shared threshold still overrides BOTH verbs (bench
-    // compatibility: forcing one path)
-    val viaShared = new Via(spark, wh, graphServeThreshold = 1L)
-    assert(viaShared.clustersServesViaGraph && viaShared.triageServesViaGraph)
-    // and a per-verb value wins over the shared one
-    val viaMixed = new Via(spark, wh, graphServeThreshold = 1L,
-      triageServeThreshold = 10000L)
-    assert(viaMixed.clustersServesViaGraph && !viaMixed.triageServesViaGraph)
+    // the mirror split: each gate only ever routes its own verb
+    val viaMirror = new Via(spark, wh,
+      clustersServeThreshold = 10000L, triageServeThreshold = 1L)
+    assert(!viaMirror.clustersServesViaGraph && viaMirror.triageServesViaGraph)
     // routed-vs-exact parity on the split Via (both paths live here)
     val now = 1700000000L + 700 * 60
-    val viaExact = new Via(spark, wh, graphServeThreshold = Long.MaxValue)
+    val viaExact = new Via(spark, wh, clustersServeThreshold = Long.MaxValue,
+      triageServeThreshold = Long.MaxValue)
     assert(rowStrs(viaSplit.clusters(now, textFilter = Some("failed user"))) ==
       rowStrs(viaExact.clusters(now, textFilter = Some("failed user"))))
     assert(rowStrs(viaSplit.triage(Seq("h3", "h17"), Seq("h40"))) ==
@@ -238,7 +225,8 @@ class TierServeSpec extends SparkSpec {
   test("batch promotion follows an existing graph; drift re-syncs (ADVICE r11)") {
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("bfresh").toString
-    val via = new Via(spark, wh, graphServeThreshold = 1L)
+    val via = new Via(spark, wh,
+      clustersServeThreshold = 1L, triageServeThreshold = 1L)
     def writeBurst(hash: String, t0: Long): Unit =
       (0 until 6).map(i => (hash, t0 - 5 - i, 900L + i))
         .toDF("rhythm_hash", "ts_sec", "event_id")
@@ -297,17 +285,12 @@ class TierServeSpec extends SparkSpec {
     // not pay a re-materialization for it (ADVICE r12); only a tier2
     // rewrite (compaction swap) repins — asserted below
     assert(!acts.exists(_.target == "serving"), acts.mkString("; "))
-    // force a tier2 rewrite under the same held pin: the repin fires and
-    // KEEPS the pin's layout choice (ADVICE r12: refreshServing used to
-    // silently revert an opted-in hash layout)
-    via.pinServing(clusterByHash = true)
+    // force a tier2 rewrite under the same held pin: the repin fires
     val acts2 = via.maintainIndexes(smallFileThreshold = 1)
     assert(acts2.find(_.target == "tier2").get.action == "compact",
       acts2.mkString("; "))
     assert(acts2.find(_.target == "serving").get.action == "repin",
       acts2.mkString("; "))
-    assert(via.servingLayoutHash,
-      "maintenance repin reverted the opted-in hash-clustered layout")
     via.unpinServing()
     assert(GraphIndex.indexedKeyCount(spark, via.graphIndexPath) ==
       storeKeys + 50L)
@@ -328,7 +311,8 @@ class TierServeSpec extends SparkSpec {
 
   test("maintainIndexes runs each store's counterweight; probes unchanged") {
     val wh = java.nio.file.Files.createTempDirectory("maint").toString
-    val via = new Via(spark, wh, graphServeThreshold = 1L)
+    val via = new Via(spark, wh,
+      clustersServeThreshold = 1L, triageServeThreshold = 1L)
     // tier2: many small files across two days via repeated appends
     (0 until 3).foreach { i =>
       tier2Fixture(200, idOffset = i * 200L).repartition(8)
