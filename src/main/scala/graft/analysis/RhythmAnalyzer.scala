@@ -42,6 +42,10 @@ object RhythmAnalyzer {
     *        tie-break column for a fully deterministic baseline sample)
     * @param baselineLookbackSec bound on how far before `windowStart` the
     *        baseline sample may reach (see [[DefaultBaselineLookbackSec]])
+    * @param baseSample the [[baselineSample]] of `ev` with the same
+    *        bounds, materialized by a caller that owns its release (the
+    *        analysis cycle unpersists it when the cycle ends); when
+    *        absent, detect caches its own and nothing releases it
     * @return rhythm_hash, anomaly_type ('novelty'|'frequency'), n,
     *         baseline_mean (null for novelty)
     */
@@ -55,30 +59,27 @@ object RhythmAnalyzer {
       freqSigma: Double = 2.5,
       stdFloor: Double = 1.5,
       tieBreakCol: Option[String] = None,
-      baselineLookbackSec: Long = DefaultBaselineLookbackSec): DataFrame = {
+      baselineLookbackSec: Long = DefaultBaselineLookbackSec,
+      baseSample: Option[DataFrame] = None): DataFrame = {
     import ev.sparkSession.implicits._
 
     val recent = ev.filter($"ts_sec" >= windowStart)
       .groupBy($"rhythm_hash").agg(count(lit(1)).as("n"))
 
-    val baseOrder = $"ts_sec".desc +: tieBreakCol.map(col(_).desc).toSeq
-    val baseSample = ev
-      .filter($"ts_sec" < windowStart &&
-        $"ts_sec" >= windowStart - baselineLookbackSec)
-      .orderBy(baseOrder: _*)
-      .limit(histSample)
-      .cache() // two consumers (span + per-hash counts); sample is <=10k rows
+    // two consumers (span + per-hash counts); sample is <=10k rows
+    val base = baseSample.getOrElse(baselineSample(ev, windowStart,
+      histSample, tieBreakCol, baselineLookbackSec).cache())
 
     // reference guards (rhythm_analysis_service.py:42-46): <2 baseline
     // points → NO stats (every recent hash classifies as novelty), and the
     // sample span is floored at 1 s — otherwise a single-epoch-second
     // sample divides by zero (ANSI mode: DIVIDE_BY_ZERO kills the cycle)
-    val span = baseSample.agg(
+    val span = base.agg(
       greatest((max($"ts_sec") - min($"ts_sec")).cast("double"), lit(1.0))
         .as("dur"),
       count(lit(1)).as("base_n"))
 
-    val stats = baseSample.groupBy($"rhythm_hash")
+    val stats = base.groupBy($"rhythm_hash")
       .agg(count(lit(1)).as("hist_n"))
       .crossJoin(broadcast(span))
       .filter($"base_n" >= 2)
@@ -99,5 +100,22 @@ object RhythmAnalyzer {
         round($"mean", 4).as("baseline_mean"))
 
     novelty.unionByName(frequency)
+  }
+
+  /** [[detect]]'s historical baseline: the `histSample` most recent rows
+    * of `ev` older than `windowStart` and within the look-back bound,
+    * newest first (uncached). */
+  def baselineSample(
+      ev: DataFrame,
+      windowStart: Long,
+      histSample: Int = DefaultHistSample,
+      tieBreakCol: Option[String] = None,
+      baselineLookbackSec: Long = DefaultBaselineLookbackSec): DataFrame = {
+    import ev.sparkSession.implicits._
+    val baseOrder = $"ts_sec".desc +: tieBreakCol.map(col(_).desc).toSeq
+    ev.filter($"ts_sec" < windowStart &&
+        $"ts_sec" >= windowStart - baselineLookbackSec)
+      .orderBy(baseOrder: _*)
+      .limit(histSample)
   }
 }

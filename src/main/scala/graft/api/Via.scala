@@ -21,7 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *                  graph ANN leg instead of the exact scan — mirroring
   *                  the reference's always-HNSW Tier-2 while keeping the
   *                  exact path where scanning is cheaper than probing.
-  *                  Defaults to the verb's measured crossover.
+  *                  Defaults to the verb's measured crossover. A store
+  *                  below it (row count) is pinned on the driver
+  *                  ([[pinServing]]).
   * @param triageServeThreshold the same gate for `triage`; its exact scan
   *                  stays competitive far longer because its query vector
   *                  is one cheap filtered average while clusters pays a
@@ -39,72 +41,89 @@ final class Via(spark: SparkSession, warehouse: String,
   val evals = new Evals(s"$warehouse/evals")
 
   private def tier1: DataFrame = spark.read.parquet(tier1Path)
-  private def tier2: DataFrame =
-    pinnedTier2.getOrElse(spark.read.parquet(tier2Path))
+  /** Tier-2 for Spark-side readers: the pin's frozen file list while a
+    * pin is held, the live store otherwise. */
+  private def tier2Of(p: Option[Via.Pin]): DataFrame =
+    p.fold(spark.read.parquet(tier2Path))(_.read)
 
   // --- serving snapshot (VERDICT r10 #4) -------------------------------
   // The searcher/commit-point model: a serving deployment pins a Tier-2
-  // snapshot in executor memory so every clusters/triage call reads the
-  // in-memory relation instead of re-listing and re-scanning parquet,
-  // and refreshes the pin when the store advances (after promotion
-  // batches / maintenance). Unpinned behavior is unchanged: each call
-  // reads the store fresh.
-  @volatile private var pinnedTier2: Option[DataFrame] = None
+  // snapshot so every clusters/triage call reads memory instead of
+  // re-listing and re-scanning parquet, and refreshes the pin when the
+  // store advances (after promotion batches / maintenance). Unpinned
+  // behavior is unchanged: each call reads the store fresh.
+  @volatile private var pin: Option[Via.Pin] = None
 
-  /** Pin the current Tier-2 store as the serving snapshot (caches it in
-    * executor memory; the first call pays the materialization).
+  /** Pin the current Tier-2 store as the serving snapshot.
     *
-    * The snapshot is a FILE-LIST plan, not a root read (r13): Spark's
+    * Every pin freezes the store's CURRENT FILE LIST, and its Spark-side
+    * relation reads exactly those files. Below `clustersServeThreshold`
+    * rows (counted from the files' parquet footers, no Spark job) the
+    * snapshot lives ON THE DRIVER: one projected collect
+    * ([[graft.search.ServingSnapshot]], ~16-21 MB at 10k rows of 384-d
+    * vectors, ≤ ~160 MB at the threshold; a refresh collects only the
+    * files the previous snapshot did not hold) from which `clusters`
+    * (with and without a text filter) and `triage` rank in-JVM with the
+    * exact verbs' kernels — a call launches no Spark job, and nothing is
+    * cached on the executors. At or above the threshold the text-filtered
+    * `clusters` already routes to the graph, and the pin stays an
+    * executor-cached relation over the file list (the first call pays
+    * nothing: the pin materializes it).
+    *
+    * Why a FILE-LIST relation, not a root read (r13): Spark's
     * CacheManager substitutes a cached plan into any same-session query
-    * containing an equal fragment, so a root-read pin would both hijack
-    * every other reader of the store AND break its own refresh (the
-    * repin's identical plan no-ops against the displaced entry, which
-    * the swap then unpersists). Engine reads that must see the live
-    * store still go through [[liveTier2Read]] as belt-and-braces
-    * against any OTHER cached plan a session user may hold.
-    * Synchronized with [[unpinServing]] so the displaced snapshot is
-    * always the one unpersisted: two unsynchronized concurrent calls
-    * could both read the same `old`, both unpersist it, and leave one of
-    * the two freshly cached snapshots persisted but unreferenced —
-    * leaking executor cache memory until session end (ADVICE r11). The
-    * cache materialization runs outside the lock; only the
-    * swap-and-unpersist is serialized.
+    * containing an equal fragment, so a cached root-read pin would both
+    * hijack every other reader of the store AND break its own refresh
+    * (the repin's identical plan no-ops against the displaced entry,
+    * which the swap then unpersists). Engine reads that must see the
+    * live store still go through [[liveTier2Read]] as belt-and-braces
+    * against any OTHER cached plan a session user may hold. The file
+    * list also backs every Spark-side reader of a driver pin — the
+    * degenerate-triage edge, the graph route and its exact fallback,
+    * `buildGraphIndex` — which is why a Tier-2 rewrite (compaction
+    * deletes the listed files) still repins ([[maintainIndexes]]).
     *
-    * The snapshot keeps the store's scan order (≈ dt/time order): the
-    * in-memory columnar cache prunes batches by per-batch column stats,
+    * The snapshot, its file list and [[pinGen]] swap together under
+    * [[pinLock]], so the displaced executor cache is always the one
+    * unpersisted: two unsynchronized concurrent calls could both read the
+    * same `old`, both unpersist it, and leave one of the two freshly
+    * cached snapshots persisted but unreferenced (ADVICE r11). The
+    * collect / cache materialization runs outside the lock. A serving
+    * call reads the pin reference once.
+    *
+    * The executor cache keeps the store's scan order (≈ dt/time order):
+    * the in-memory columnar cache prunes batches by per-batch column stats,
     * so that order gives the time-windowed serving filters cheap batch
     * skipping. A `rhythm_hash`-range-clustered layout was measured
     * against it SAME-PROCESS on the 600k ServeBench store at 8 mixed
     * callers — time order 22.2 QPS vs hash order 5.6 — and removed. */
   def pinServing(): Unit = {
-    // the snapshot is built from the EXPLICIT file list, not a root
-    // read, for two reasons (r13): (a) a REPIN's root read is
-    // plan-equal to the displaced pin, so `.cache()` no-ops against the
-    // old entry and the subsequent unpersist evicts it — leaving the
-    // "refreshed" pin uncached; (b) a file-list plan is never
-    // substituted into other readers' root reads, so one Via's pin no
-    // longer silently hijacks every other same-session reader of the
-    // store. The frozen file list IS the snapshot lineage the pin model
-    // wants.
-    val raw = liveTier2Read()
-    val rawFiles = raw.inputFiles
-    val df = raw.cache()
-    df.count()
+    val files = liveTier2Files()
+    val raw = readTier2(files)
+    val rows = graft.sources.FooterStats.rowCount(spark, files)
+    val paths = files.map(_.getPath.toString)
+    val next =
+      if (rows.exists(_ < clustersServeThreshold))
+        Via.Pin(paths, raw, Some(graft.search.ServingSnapshot.collect(files,
+          readTier2, previous = pin.flatMap(_.snapshot))))
+      else {
+        val df = raw.cache()
+        df.count()
+        Via.Pin(paths, df, None)
+      }
     val displaced = pinLock.synchronized {
-      val old = pinnedTier2
-      pinnedTier2 = Some(df)
-      pinnedFiles = rawFiles
+      val old = pin
+      pin = Some(next)
       pinGen.incrementAndGet() // after the snapshot swap: see pinGen doc
       old
     }
     exampleVecMemo.clear() // new snapshot, new example vectors
-    displaced.foreach(_.unpersist())
+    // only an executor-cache pin holds a cache entry; one over the SAME
+    // file list shares it with the new pin (plan-equal), so it stays
+    displaced.filter(old => old.snapshot.isEmpty &&
+        !(next.snapshot.isEmpty && old.files.sameElements(next.files)))
+      .foreach(_.read.unpersist())
   }
-
-  /** The pin's frozen lineage (captured at pin time): maintainIndexes
-    * checks these still exist to catch a tier2 rewrite whose sweep died
-    * before the repin. */
-  @volatile private var pinnedFiles: Array[String] = Array.empty
 
   /** Re-pin the snapshot over the store's current content. */
   def refreshServing(): Unit = pinServing()
@@ -112,23 +131,28 @@ final class Via(spark: SparkSession, warehouse: String,
   /** Drop the pin: serving calls read the store per call again. */
   def unpinServing(): Unit = {
     val displaced = pinLock.synchronized {
-      val old = pinnedTier2
-      pinnedTier2 = None
+      val old = pin
+      pin = None
       pinGen.incrementAndGet()
       old
     }
     exampleVecMemo.clear()
-    displaced.foreach(_.unpersist())
+    displaced.filter(_.snapshot.isEmpty).foreach(_.read.unpersist())
   }
   private val pinLock = new Object
 
-  /** Triage example-vector memo, valid EXACTLY while a pin is held: the
+  /** Whether the held pin is a driver snapshot (for specs). */
+  private[graft] def pinnedOnDriver: Boolean = pin.exists(_.snapshot.isDefined)
+
+  /** Triage example-vector memo for the graph route under an
+    * executor-cache pin, valid EXACTLY while that pin is held: the
     * vector is a pure function of the pinned snapshot + the example
     * hashes, and the pin is the freeze contract (every pin/unpin/refresh
     * clears it). Unpinned serving recomputes per call — the live store
-    * may move between calls. Saves the two small store-scan jobs
-    * (~55 ms at 150k rows) on every repeat-triage call, the common UI
-    * shape (a triage session iterates on the same example set).
+    * may move between calls; a driver snapshot recomputes it in-JVM.
+    * Saves the two small store-scan jobs (~55 ms at 150k rows) on every
+    * repeat-triage call, the common UI shape (a triage session iterates
+    * on the same example set).
     *
     * Keys carry [[pinGen]]: clear() alone cannot close the race where a
     * triage call observes the old pin, the pin transitions (swap +
@@ -143,7 +167,7 @@ final class Via(spark: SparkSession, warehouse: String,
 
   /** Pin-generation counter, bumped under [[pinLock]] AFTER each
     * snapshot swap (pin/refresh/unpin). A reader that observes
-    * generation g and then reads [[pinnedTier2]] sees the snapshot of
+    * generation g and then reads [[pin]] sees the snapshot of
     * generation ≥ g, so a memo entry's vector can never be OLDER than
     * the generation it is keyed under — the stale direction is
     * impossible, and the newer direction only wastes one recompute
@@ -162,22 +186,30 @@ final class Via(spark: SparkSession, warehouse: String,
     * (drift detection, re-sync sources, the pin's own snapshot) always
     * read the explicit CURRENT file list — a plan no root-read cache
     * entry matches. Listing is maintenance-cadence cost. */
-  private def liveTier2Read(): DataFrame = {
+  private def liveTier2Read(): DataFrame = readTier2(liveTier2Files())
+
+  /** Tier-2's current data files (recursive listing, hidden files
+    * skipped); empty when the store does not exist. */
+  private def liveTier2Files(): Seq[org.apache.hadoop.fs.FileStatus] = {
     import org.apache.hadoop.fs.Path
     val root = new Path(tier2Path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return spark.read.parquet(tier2Path)
-    def files(p: Path): Seq[String] =
+    def files(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { s =>
         val n = s.getPath.getName
         if (n.startsWith("_") || n.startsWith(".")) Seq.empty
         else if (s.isDirectory) files(s.getPath)
-        else Seq(s.getPath.toString)
+        else Seq(s)
       }
-    val fl = files(root)
-    if (fl.isEmpty) spark.read.parquet(tier2Path)
-    else spark.read.option("basePath", tier2Path).parquet(fl: _*)
+    if (fs.exists(root)) files(root) else Seq.empty
   }
+
+  /** The explicit file-list read of `files` (a root read when empty),
+    * its schema from the newest file's footer (no inference job). */
+  private def readTier2(files: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame =
+    if (files.isEmpty) spark.read.parquet(tier2Path)
+    else graft.sources.FooterStats.readDayPartitioned(spark, tier2Path,
+      files.map(_.getPath), files.maxBy(_.getModificationTime).getPath)
 
   // --- POST /ingest/stream (S1) ---------------------------------------
   /** Start streaming ingest from a JSONL drop directory. */
@@ -579,8 +611,9 @@ final class Via(spark: SparkSession, warehouse: String,
       () => graft.search.IvfIndex.compact(spark, p, targetBytes)))
     // a pinned serving snapshot's lineage is the parquet file list frozen
     // at pin time: once a maintenance action REWRITES TIER-2 (the
-    // compaction swap deletes the listed files), an evicted cache block
-    // would recompute against deleted files and fail the serving call.
+    // compaction swap deletes the listed files), an evicted cache block —
+    // or, under a driver snapshot, any Spark-side fallback — would read
+    // deleted files and fail the serving call.
     // Only a tier2 rewrite creates that hazard — tier1 compaction and
     // index folds/syncs never touch the pinned store's files, so they do
     // not pay a re-materialization (ADVICE r12).
@@ -589,10 +622,10 @@ final class Via(spark: SparkSession, warehouse: String,
     // (VERDICT r13 item 6) reports tier2 "none" on the NEXT sweep — the
     // action-based condition alone would leave the stale-lineage pin in
     // place forever. One fs.exists per pinned file, maintenance-only.
+    val held = pin
     def pinLineageBroken(): Boolean =
-      pinnedTier2.isDefined &&
-        pinnedFiles.exists(f => !fs.exists(new Path(f)))
-    if (pinnedTier2.isDefined &&
+      held.exists(_.files.exists(f => !fs.exists(new Path(f))))
+    if (held.isDefined &&
         (acts.exists(a => a.target == "tier2" && a.action != "none") ||
           pinLineageBroken())) {
       refreshServing()
@@ -607,44 +640,61 @@ final class Via(spark: SparkSession, warehouse: String,
   private[graft] var maintainCrashAfter: Option[String] = None
 
   // --- POST /analysis/tier2/clusters (V1/V6/A5/A6/J3/J4) --------------
-  /** Text-filtered calls route through the Tier-2 graph ANN index when
-    * one exists and covers at least `clustersServeThreshold` nodes (the
-    * reference serves these through Qdrant's HNSW; exact scan below the
-    * crossover is OUR improvement on it). The graph route ranks its hits
-    * on the driver with the exact verb's kernels (parity-pinned by
-    * TierServeSpec); an under-filled indexed result falls back to the
-    * exact scan (ClusterSearch Scaladoc). */
+  /** Under a driver-snapshot pin every call ranks the snapshot in-JVM
+    * (exact, no Spark job — see [[pinServing]]). Otherwise text-filtered
+    * calls route through the Tier-2 graph ANN index when one exists and
+    * covers at least `clustersServeThreshold` nodes (the reference serves
+    * these through Qdrant's HNSW; exact scan below the crossover is OUR
+    * improvement on it). The graph route ranks its hits on the driver
+    * with the exact verb's kernels (parity-pinned by TierServeSpec); an
+    * under-filled indexed result falls back to the exact scan
+    * (ClusterSearch Scaladoc). */
   def clusters(
       nowSec: Long,
       startTs: Option[Long] = None,
       endTs: Option[Long] = None,
-      textFilter: Option[String] = None): DataFrame =
-    textFilter match {
-      case Some(f) if graphServes(clustersServeThreshold) =>
-        ClusterSearch.clustersIndexed(tier2, graphIndexPath, Some(rules),
-          nowSec, startTs, endTs, textFilter = f)
+      textFilter: Option[String] = None): DataFrame = {
+    val p = pin
+    (p.flatMap(_.snapshot), textFilter) match {
+      case (Some(snap), _) =>
+        ClusterSearch.clustersSnapshot(spark, snap, Some(rules), nowSec,
+          startTs, endTs, textFilter)
+      case (None, Some(f)) if graphServes(clustersServeThreshold) =>
+        ClusterSearch.clustersIndexed(tier2Of(p), graphIndexPath,
+          Some(rules), nowSec, startTs, endTs, textFilter = f)
       case _ =>
-        ClusterSearch.clusters(tier2, Some(rules), nowSec, startTs, endTs,
-          textFilter)
+        ClusterSearch.clusters(tier2Of(p), Some(rules), nowSec, startTs,
+          endTs, textFilter)
     }
+  }
 
   // --- POST /analysis/tier2/triage (V3/A7) ----------------------------
-  def triage(positive: Seq[String], negative: Seq[String]): DataFrame =
-    if (graphServes(triageServeThreshold)) {
-      // pinned serving memoizes the example vector (pure function of the
-      // frozen snapshot; memo cleared on every pin transition)
-      // generation read FIRST: the snapshot the compute reads is then
-      // always ≥ the keyed generation (see pinGen doc — ADVICE r16)
-      val gen = pinGen.get()
-      val qv =
-        if (pinnedTier2.isDefined)
-          Some(exampleVecMemo.computeIfAbsent(
-            (gen, positive.sorted, negative.sorted),
-            _ => ClusterSearch.exampleVectorFast(tier2, positive, negative)))
-        else None
-      ClusterSearch.triageIndexedImpl(tier2, graphIndexPath, positive,
-        negative, ClusterSearch.TriageLimit, precomputedQv = qv)._1
-    } else ClusterSearch.triage(tier2, positive, negative)
+  /** Routed like [[clusters]]: a driver snapshot first, then the graph at
+    * or above `triageServeThreshold` nodes, then the exact scan. */
+  def triage(positive: Seq[String], negative: Seq[String]): DataFrame = {
+    // generation read FIRST: the snapshot the memoized compute reads is
+    // then always ≥ the keyed generation (see pinGen doc — ADVICE r16)
+    val gen = pinGen.get()
+    val p = pin
+    p.flatMap(_.snapshot) match {
+      case Some(snap) =>
+        ClusterSearch.triageSnapshot(snap, tier2Of(p), positive, negative)
+      case None if graphServes(triageServeThreshold) =>
+        // an executor-cache pin memoizes the example vector (pure
+        // function of the frozen snapshot; memo cleared on every pin
+        // transition)
+        val qv =
+          if (p.isDefined)
+            Some(exampleVecMemo.computeIfAbsent(
+              (gen, positive.sorted, negative.sorted),
+              _ => ClusterSearch.exampleVectorFast(tier2Of(p), positive,
+                negative)))
+          else None
+        ClusterSearch.triageIndexedImpl(tier2Of(p), graphIndexPath, positive,
+          negative, ClusterSearch.TriageLimit, precomputedQv = qv)._1
+      case None => ClusterSearch.triage(tier2Of(p), positive, negative)
+    }
+  }
 
   /** The ANN-serving gate: graph index present and at/above the verb's
     * threshold. */
@@ -660,7 +710,7 @@ final class Via(spark: SparkSession, warehouse: String,
     * store — the initial build; [[startStreamingPromotion]] keeps it
     * fresh per batch and [[maintainIndexes]] folds its buffer. */
   def buildGraphIndex(numParts: Int = graft.search.GraphIndex.NumParts): Unit =
-    graft.search.TierIndex.build(tier2, graphIndexPath, numParts)
+    graft.search.TierIndex.build(tier2Of(pin), graphIndexPath, numParts)
 
   // --- POST /control/suppress | /control/patch (C4, T4) ---------------
   def suppress(rhythmHash: String, ttlSec: Long, nowSec: Long): Unit =
@@ -732,6 +782,12 @@ object Via {
   private final case class LedgeredSkips(
       leaf: org.apache.hadoop.fs.Path => Boolean,
       file: org.apache.hadoop.fs.Path => Boolean)
+
+  /** A held serving pin: the Tier-2 file list frozen at pin time, the
+    * Spark relation over it (executor-cached when there is no driver
+    * snapshot), and the driver snapshot below the clusters crossover. */
+  private final case class Pin(files: Seq[String], read: DataFrame,
+      snapshot: Option[graft.search.ServingSnapshot])
 
   /** One maintenance decision: which store, what ran, why. */
   final case class Maintenance(target: String, action: String, detail: String)

@@ -4,7 +4,7 @@ import graft.GraftFunctions
 import graft.control.Rules
 import graft.functions.TextFunctions.matchText
 import graft.functions.VectorFunctions.cosine
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Tier-2 query surface: grouped cluster search and triage recommend.
@@ -176,24 +176,26 @@ object ClusterSearch {
     math.max(GraphIndex.EfSearch, candidateK / GraphIndex.NumParts + 32)
 
   // -------------------------------------------------------------------
-  // Driver-side candidate ranking — the only graph serving route
-  // (VERDICT r15 item 6). A graph probe's candidates are already O(k)
-  // rows ON THE DRIVER (ServingHit payload + embedding — Qdrant's
-  // hit-with-payload model); pushing them back through a Catalyst
-  // pipeline cost 2 jobs + planning per call (~160 ms of the ~275 ms
-  // p50 at 150k rows) just to process ~400 rows. The ranker applies the
+  // Driver-side ranking. Two candidate sets reach these rankers, both
+  // already ON THE DRIVER: a graph probe's O(k) hits (ServingHit payload
+  // + embedding — Qdrant's hit-with-payload model; the only graph
+  // serving route, VERDICT r15 item 6), and every row of a store that
+  // `Via` pins as a [[ServingSnapshot]] (below the clusters crossover).
+  // Pushing either back through a Catalyst pipeline costs 2-3 jobs plus
+  // planning per call (~160 ms of the ~275 ms graph-served p50 at 150k
+  // rows; ~290-560 ms per exact call on a pinned 10k-row store) to
+  // process rows the driver already holds. The rankers apply the
   // IDENTICAL stages in-JVM: every predicate/score calls the same static
   // kernel the Catalyst expression compiles to
   // (ContainsAllTokens.compute; the CosineSimExpr fold over the same
-  // float-cast values; java BigDecimal HALF_UP like Catalyst Round), null
-  // handling mirrors the column semantics case by case (noted inline),
-  // and the orderings replicate TopKPerGroup / TakeOrdered key order —
-  // parity is pinned by TierServeSpec (indexed == exact on every
-  // fixture, including rules and range filters). Fewer than `limit`
-  // survivors — or hits without payloads (a graph built before payloads
-  // existed) — fall back to the exact whole-store scan. At any corpus
-  // size the ranked set stays O(k), so driver ranking is
-  // scale-independent by construction.
+  // float-cast values; java BigDecimal HALF_UP like Catalyst Round),
+  // null handling mirrors the column semantics case by case (noted
+  // inline), and the orderings replicate TopKPerGroup / TakeOrdered key
+  // order, ties kept in candidate order. Parity is pinned by
+  // TierServeSpec (graph-served == exact) and ServingSnapshotSpec (a
+  // pinned snapshot == the unpinned scan). On the graph route, fewer than
+  // `limit` scored survivors — or hits without payloads (a graph built
+  // before payloads existed) — fall back to the exact whole-store scan.
   // -------------------------------------------------------------------
 
   private[search] final case class Cand(hash: String, aType: String,
@@ -241,7 +243,7 @@ object ClusterSearch {
   }
 
   /** [[cosineFF]] against a double query vector (triage's typedLit). */
-  private def cosineFD(a: Array[Float], b: Seq[Double]): Double = {
+  private def cosineFD(a: Array[Float], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var d = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -254,37 +256,69 @@ object ClusterSearch {
     if (sna == 0.0 || snb == 0.0) 0.0 else d / (sna * snb)
   }
 
-  /** Catalyst Round(x, 6) for doubles: BigDecimal.valueOf + HALF_UP. */
+  /** Catalyst Round(x, 6) for doubles: BigDecimal.valueOf + HALF_UP; NaN
+    * and infinities pass through unrounded. */
   private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** score desc, start_ts desc (nulls last, Spark's desc default), dt
-    * asc (nulls first) — TopKPerGroup's within-group key order. */
-  private def cmpGroupKey(a: (Cand, Double), b: (Cand, Double)): Int = {
-    val s = java.lang.Double.compare(b._2, a._2)
+  /** round(cosine(dense, q), 6) with CosineSimExpr's nulls: a NULL vector
+    * or a dimension mismatch scores NULL (a NULL score sorts after every
+    * scored row, so it only surfaces when too few rows are scored). */
+  private def scoreFF(v: Array[Float], q: Array[Float]): java.lang.Double =
+    if (v == null || v.length != q.length) null else round6(cosineFF(v, q))
+  private def scoreFD(v: Array[Float], q: Array[Double]): java.lang.Double =
+    if (v == null || v.length != q.length) null else round6(cosineFD(v, q))
+
+  /** Spark's double order (SQLOrderingUtil.compareDoubles): NaN equals
+    * NaN and sorts above every number; -0.0 equals 0.0. */
+  private def cmpDouble(a: Double, b: Double): Int =
+    if (a == b) 0
+    else if (a.isNaN) { if (b.isNaN) 0 else 1 }
+    else if (b.isNaN) -1
+    else java.lang.Double.compare(a, b)
+
+  /** Null placement of Spark's `desc` (nulls last) and `asc` (nulls
+    * first) sort orders around a comparator for the non-null values. */
+  private def nullsLast[T](a: T, b: T)(cmp: (T, T) => Int): Int =
+    if (a == null) { if (b == null) 0 else 1 }
+    else if (b == null) -1
+    else cmp(a, b)
+  private def nullsFirst[T](a: T, b: T)(cmp: (T, T) => Int): Int =
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else cmp(a, b)
+
+  private type Scored = (Cand, java.lang.Double)
+  private def scoreDesc(a: Scored, b: Scored): Int =
+    nullsLast(a._2, b._2)((x, y) => cmpDouble(y, x))
+  private def startTsDesc(a: Scored, b: Scored): Int =
+    nullsLast(a._1.startTs, b._1.startTs)((x, y) => java.lang.Long.compare(y, x))
+
+  /** score desc, start_ts desc, dt asc — TopKPerGroup's within-group key
+    * order. */
+  private def cmpGroupKey(a: Scored, b: Scored): Int = {
+    val s = scoreDesc(a, b)
     if (s != 0) return s
-    val t = (a._1.startTs, b._1.startTs) match {
-      case (null, null) => 0
-      case (null, _) => 1
-      case (_, null) => -1
-      case (x, y) => java.lang.Long.compare(y, x)
-    }
+    val t = startTsDesc(a, b)
     if (t != 0) return t
-    (a._1.dt, b._1.dt) match {
-      case (null, null) => 0
-      case (null, _) => -1
-      case (_, null) => 1
-      case (x, y) => x.compareTo(y)
-    }
+    nullsFirst(a._1.dt, b._1.dt)(_ compareTo _)
   }
 
-  private def rankClustersDriver(cands: Seq[Cand], activeRules: Set[String],
-      startTs: Option[Long], endTs: Option[Long], textFilter: String,
-      limit: Int): Seq[org.apache.spark.sql.Row] = {
-    val qTokens = textFilter.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-    val qEmb = graft.functions.EmbedText.embedString(textFilter)
-    val scored = cands.iterator
+  /** The exact clusters pipeline in-JVM, NULL scores included (the graph
+    * route drops them; see [[clustersIndexedImpl]]). */
+  private def rankClustersDriver(cands: Iterable[Cand],
+      activeRules: Set[String], startTs: Option[Long], endTs: Option[Long],
+      textFilter: Option[String], limit: Int): Seq[Row] = {
+    val qTokens = textFilter.fold(Array.empty[String])(
+      _.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty))
+    val qEmb = textFilter.map(graft.functions.EmbedText.embedString)
+    // top-1 per rhythm_hash (NULL hashes form one group): a candidate
+    // replaces the held one only when strictly better, so ties keep the
+    // first in candidate order — TopKPerGroup's bounded-buffer insert
+    val best = new java.util.HashMap[String, Scored]()
+    cands.iterator
       // range filters: a NULL start_ts fails a bounded comparison (drops)
       // and passes the unbounded lit(true), like the column predicates
       .filter(c => startTs.forall(s => c.startTs != null && c.startTs >= s))
@@ -297,64 +331,65 @@ object ClusterSearch {
           qTokens)))
       // rules left_anti: a NULL hash never matches a rule (kept)
       .filter(c => c.hash == null || !activeRules.contains(c.hash))
-      // dimension mismatch: CosineSimExpr null-propagates, so on the
-      // Catalyst path such a row scores NULL and can never outrank a
-      // scored row; the buffer serving path drops it outright. Mirror
-      // the drop here — folding over min(len) would instead invent a
-      // truncated score and rank the row differently (ADVICE r16).
-      .filter(c => c.dense != null && c.dense.length == qEmb.length)
-      .map(c => (c, round6(cosineFF(c.dense, qEmb))))
-      .toVector
-    // top-1 per rhythm_hash (ties keep the first in candidate order,
-    // like the bounded buffer fed by the single-partition local scan)
-    val best = scored.groupBy(_._1.hash).valuesIterator
-      .map(g => g.minBy(identity)(Ordering.fromLessThan[(Cand, Double)](
-        (a, b) => cmpGroupKey(a, b) < 0)))
-      .toVector
-    // final order: score desc, start_ts desc, rhythm_hash asc
-    best.sortWith { (a, b) =>
-      val s = java.lang.Double.compare(b._2, a._2)
-      if (s != 0) s < 0
-      else {
-        val t = (a._1.startTs, b._1.startTs) match {
-          case (null, null) => 0
-          case (null, _) => 1
-          case (_, null) => -1
-          case (x, y) => java.lang.Long.compare(y, x)
-        }
-        if (t != 0) t < 0
-        else (a._1.hash, b._1.hash) match {
-          case (null, null) => false
-          case (null, _) => true
-          case (_, null) => false
-          case (x, y) => x.compareTo(y) < 0
-        }
+      .foreach { c =>
+        // no text filter: lit(0.0), no vector read at all
+        val sc: Scored = (c, qEmb.fold[java.lang.Double](0.0)(scoreFF(c.dense, _)))
+        val held = best.get(c.hash)
+        if (held == null || cmpGroupKey(sc, held) < 0) best.put(c.hash, sc)
       }
-    }.take(limit).map { case (c, sc) =>
-      org.apache.spark.sql.Row(c.hash, c.aType, c.aCtx, c.service,
+    import scala.jdk.CollectionConverters._
+    // final order: score desc, start_ts desc, rhythm_hash asc (total:
+    // one row per hash)
+    topK(best.values.iterator.asScala, limit) { (a, b) =>
+      val s = scoreDesc(a, b)
+      if (s != 0) s
+      else {
+        val t = startTsDesc(a, b)
+        if (t != 0) t else nullsFirst(a._1.hash, b._1.hash)(_ compareTo _)
+      }
+    }.map { case (c, sc) =>
+      Row(c.hash, c.aType, c.aCtx, c.service,
         c.severity, c.body, c.count, c.startTs, c.endTs, sc)
     }
   }
 
-  private def rankTriageDriver(cands: Seq[Cand], exclude: Set[String],
-      qv: Seq[Double], limit: Int): Seq[org.apache.spark.sql.Row] =
-    cands.iterator
+  /** The exact triage rank in-JVM, NULL scores included. */
+  private def rankTriageDriver(cands: Iterable[Cand], exclude: Set[String],
+      qv: Seq[Double], limit: Int): Seq[Row] = {
+    val q = qv.toArray
+    val scored = cands.iterator
       // !isin(...) over a NULL hash evaluates NULL → dropped
       .filter(c => c.hash != null && !exclude.contains(c.hash))
-      // dimension mismatch → drop, mirroring CosineSimExpr's
-      // null-on-mismatch (see rankClustersDriver; ADVICE r16)
-      .filter(c => c.dense != null && c.dense.length == qv.length)
-      .map(c => (c, round6(cosineFD(c.dense, qv))))
-      .toVector
-      .sortWith { (a, b) =>
-        val s = java.lang.Double.compare(b._2, a._2)
-        if (s != 0) s < 0
-        else a._1.hash.compareTo(b._1.hash) < 0
+      .map(c => (c, scoreFD(c.dense, q)): Scored)
+      .zipWithIndex
+    // score desc, rhythm_hash asc; rows tied on both keep candidate order
+    topK(scored, limit) { (a, b) =>
+      val s = scoreDesc(a._1, b._1)
+      if (s != 0) s
+      else {
+        val h = a._1._1.hash.compareTo(b._1._1.hash)
+        if (h != 0) h else Integer.compare(a._2, b._2)
       }
-      .take(limit).map { case (c, sc) =>
-        org.apache.spark.sql.Row(c.hash, c.aType, c.service, c.severity,
-          c.body, c.count, c.startTs, sc)
+    }.map { case ((c, sc), _) =>
+      Row(c.hash, c.aType, c.service, c.severity, c.body, c.count,
+        c.startTs, sc)
+    }
+  }
+
+  /** The first `k` of `items` in `cmp` order (a total order), sorted: a
+    * bounded heap holding the k best so far, O(n log k). */
+  private def topK[T](items: Iterator[T], k: Int)(cmp: (T, T) => Int): Vector[T] = {
+    val worstFirst = new java.util.PriorityQueue[T](math.max(1, k),
+      (a: T, b: T) => cmp(b, a))
+    items.foreach { x =>
+      if (worstFirst.size < k) worstFirst.add(x)
+      else if (k > 0 && cmp(x, worstFirst.peek()) < 0) {
+        worstFirst.poll(); worstFirst.add(x)
       }
+    }
+    import scala.jdk.CollectionConverters._
+    worstFirst.asScala.toVector.sortWith(cmp(_, _) < 0)
+  }
 
   import org.apache.spark.sql.types._
   private val ClustersOutSchema = StructType(Seq(
@@ -400,18 +435,60 @@ object ClusterSearch {
       .map(_.toDouble).toSeq
     val k = candidateKFor(limit)
     val hits = GraphIndex.servingHits(spark, graphPath, qv, k, serveEf(k))
+    // unscored rows (NULL or wrong-dimension vectors) rank last, so
+    // dropping them here leaves the scored prefix; a short prefix falls
+    // back to the exact scan
     val rows =
       if (hits.isEmpty || hits.exists(_.payload == null)) Seq.empty
       else rankClustersDriver(hits.map(parseCand),
         rules.fold(Set.empty[String])(_.activeHashes(nowSec)),
-        startTs, endTs, textFilter, limit)
+        startTs, endTs, Some(textFilter), limit)
+        .filterNot(_.isNullAt(ClustersOutSchema.length - 1))
     if (rows.length < limit)
       (clustersPipeline(tier2, rules, nowSec, startTs, endTs,
         Some(textFilter), limit), false)
-    else
-      (spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), ClustersOutSchema), true)
+    else (localRows(spark, rows, ClustersOutSchema), true)
   }
+
+  /** Driver-ranked rows as a DataFrame: a local relation, so collecting
+    * it launches no Spark job. */
+  private def localRows(spark: SparkSession, rows: Seq[Row],
+      schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** [[clusters]] over a pinned driver snapshot: the exact verb, ranked
+    * in-JVM over every row — no Spark job (the active-rule set is
+    * memoized by [[Rules.activeHashes]]). */
+  def clustersSnapshot(
+      spark: SparkSession,
+      snapshot: ServingSnapshot,
+      rules: Option[Rules],
+      nowSec: Long,
+      startTs: Option[Long] = None,
+      endTs: Option[Long] = None,
+      textFilter: Option[String] = None,
+      limit: Int = GroupLimit): DataFrame =
+    localRows(spark, rankClustersDriver(snapshot.rows,
+      rules.fold(Set.empty[String])(_.activeHashes(nowSec)),
+      startTs, endTs, textFilter, limit), ClustersOutSchema)
+
+  /** [[triage]] over a pinned driver snapshot: the example vector and the
+    * rank run in-JVM over every row. The degenerate edge (no positive
+    * example matched) keeps the Spark verb over `tier2`, the relation
+    * the snapshot was collected from, for its NULL-propagation
+    * semantics. */
+  def triageSnapshot(
+      snapshot: ServingSnapshot,
+      tier2: DataFrame,
+      positiveHashes: Seq[String],
+      negativeHashes: Seq[String],
+      limit: Int = TriageLimit): DataFrame =
+    exampleVectorDriver(snapshot.rows, positiveHashes, negativeHashes) match {
+      case Some(qv) =>
+        localRows(tier2.sparkSession, rankTriageDriver(snapshot.rows,
+          (positiveHashes ++ negativeHashes).toSet, qv, limit), TriageOutSchema)
+      case None => triage(tier2, positiveHashes, negativeHashes, limit)
+    }
 
   /** Graph-accelerated [[triage]]. */
   def triageIndexed(
@@ -469,10 +546,42 @@ object ClusterSearch {
       var i = 0; while (i < dim) { ps(i) += p(i); ns(i) += nvec(i); i += 1 }
       pc += pcnt; nc += ncnt
     }
-    if (pc == 0 || (negativeHashes.nonEmpty && nc == 0)) None
-    else if (nc == 0) Some(ps.map(_ / pc).toSeq)
-    else Some((0 until dim).map(i => 2.0 * ps(i) / pc - ns(i) / nc))
+    recommendVector(ps, pc, ns, nc, negativeHashes.nonEmpty)
   }
+
+  /** [[exampleVectorFast]] over driver-held rows (a pinned snapshot):
+    * the same per-role sums over the float-cast values, one pass in
+    * snapshot order. */
+  private def exampleVectorDriver(
+      cands: Iterable[Cand],
+      positiveHashes: Seq[String],
+      negativeHashes: Seq[String]): Option[Seq[Double]] = {
+    val dim = graft.functions.EmbedText.Dim
+    val posSet = positiveHashes.toSet
+    val negSet = negativeHashes.toSet
+    val ps = new Array[Double](dim); val ns = new Array[Double](dim)
+    var pc = 0L; var nc = 0L
+    def addInto(sum: Array[Double], v: Array[Float]): Unit = {
+      var i = 0; while (i < dim && i < v.length) { sum(i) += v(i); i += 1 }
+    }
+    // a NULL hash never matches isin; NULL/empty vectors are skipped
+    cands.foreach { c =>
+      if (c.hash != null && c.dense != null && c.dense.nonEmpty) {
+        if (posSet(c.hash)) { addInto(ps, c.dense); pc += 1 }
+        if (negSet(c.hash)) { addInto(ns, c.dense); nc += 1 }
+      }
+    }
+    recommendVector(ps, pc, ns, nc, negativeHashes.nonEmpty)
+  }
+
+  /** `avg(pos) + (avg(pos) - avg(neg))` from per-role sums and counts;
+    * None when the positive side (or a requested negative side) matched
+    * no rows. */
+  private def recommendVector(ps: Array[Double], pc: Long,
+      ns: Array[Double], nc: Long, hasNegatives: Boolean): Option[Seq[Double]] =
+    if (pc == 0 || (hasNegatives && nc == 0)) None
+    else if (nc == 0) Some(ps.map(_ / pc).toSeq)
+    else Some(ps.indices.map(i => 2.0 * ps(i) / pc - ns(i) / nc))
 
   /** Returns (result, servedViaGraph). `precomputedQv` lets a caller
     * holding a frozen serving snapshot (Via's pin) memoize the example
@@ -500,10 +609,9 @@ object ClusterSearch {
       if (hits.isEmpty || hits.exists(_.payload == null)) Seq.empty
       else rankTriageDriver(hits.map(parseCand),
         (positiveHashes ++ negativeHashes).toSet, qv, limit)
+        .filterNot(_.isNullAt(TriageOutSchema.length - 1))
     if (rows.length < limit)
       (triage(tier2, positiveHashes, negativeHashes, limit), false)
-    else
-      (spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), TriageOutSchema), true)
+    else (localRows(spark, rows, TriageOutSchema), true)
   }
 }

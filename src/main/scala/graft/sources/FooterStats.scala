@@ -152,6 +152,20 @@ object FooterStats {
       column: String): Seq[(Path, Option[FileStat])] =
     readConcurrently(files, spark.sessionState.newHadoopConf(), column)
 
+  /** Total row count of `files` from their footers' row-group counts
+    * (zero Spark jobs; memoized with the column stats). None when any
+    * footer is unreadable. */
+  def rowCount(spark: SparkSession, files: Seq[FileStatus]): Option[Long] = {
+    val perFile = readConcurrently(files, spark.sessionState.newHadoopConf(),
+      RowCountColumn).map(_._2)
+    if (perFile.exists(_.isEmpty)) None
+    else Some(perFile.flatten.map(_.nonNullRows).sum)
+  }
+
+  /** Memo column key of [[rowCount]]'s per-file entries: no parquet column
+    * path can be empty. */
+  private val RowCountColumn = ""
+
   /** The data files directly under `dir` (the shared hidden-file
     * filter), for callers that list once and reuse the statuses. */
   def listDataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
@@ -227,12 +241,29 @@ object FooterStats {
       }
     } catch { case _: Exception => None }
 
+  /** `files` of a `dt`-partitioned store under `basePath`, read with the
+    * schema of `schemaFile`'s footer plus the `dt` partition column —
+    * where `spark.read.parquet(files)` would launch a schema-inference
+    * job first. `schemaFile` should be the newest file: it carries the
+    * latest engine schema, at least as current as stock inference's
+    * pick-any-file. Unreadable footer → plain inference. */
+  def readDayPartitioned(spark: SparkSession, basePath: String,
+      files: Seq[Path], schemaFile: Path): org.apache.spark.sql.DataFrame =
+    fileSchema(spark, schemaFile)
+      .map(s => spark.read.schema(
+        s.add(org.apache.spark.sql.types.StructField("dt",
+          org.apache.spark.sql.types.DateType, nullable = true))))
+      .getOrElse(spark.read)
+      .option("basePath", basePath)
+      .parquet(files.map(_.toString): _*)
+
   /** One file's footer stats; None when the footer was READ but its
     * stats can't prove bounds (absent/dropped stats, non-INT64 values).
     * THROWS on IO failure — the caller decides whether a failure is
     * cacheable (it is not). A PROVABLY all-null row group contributes
     * no rows and no bounds — like an empty file, not like missing
-    * stats (FooterStatsSpec). */
+    * stats (FooterStatsSpec). For [[RowCountColumn]]: the file's total
+    * row count, no bounds. */
   private def readFileStats(f: Path,
       conf: org.apache.hadoop.conf.Configuration,
       column: String): Option[FileStat] = {
@@ -240,6 +271,9 @@ object FooterStats {
       try {
         import scala.jdk.CollectionConverters._
         val blocks = reader.getFooter.getBlocks.asScala
+        if (column == RowCountColumn)
+          return Some(FileStat(Long.MaxValue, Long.MinValue,
+            blocks.map(_.getRowCount).sum))
         var mn = Long.MaxValue; var mx = Long.MinValue; var rows = 0L
         var ok = true
         blocks.foreach { b =>

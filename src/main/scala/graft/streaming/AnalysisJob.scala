@@ -154,21 +154,12 @@ object AnalysisJob {
       if (provenBaseRows >= histSample && kept.nonEmpty) {
         // schema from the NEWEST kept file's footer, driver-side: plain
         // `spark.read.parquet(files)` fires a Spark job just to infer it
-        // (the job floor ate the anchoring win — AnchorBench); the
-        // newest file carries the latest engine schema, which is at
-        // least as current as stock inference's pick-any-file. The
-        // partition column rides along explicitly (file footers don't
-        // know it). Unreadable footer → plain inference.
+        // (the job floor ate the anchoring win — AnchorBench)
         val newest = stats
           .filter { case (_, m) => m.forall(_.max >= anchor) }
           .maxBy(_._2.map(_.max).getOrElse(Long.MinValue))._1
-        val reader = graft.sources.FooterStats.fileSchema(spark, newest)
-          .map(s => spark.read.schema(
-            s.add(org.apache.spark.sql.types.StructField("dt",
-              org.apache.spark.sql.types.DateType, nullable = true))))
-          .getOrElse(spark.read)
-        return reader.option("basePath", tier1Path)
-          .parquet(kept.map(_.toString): _*)
+        return graft.sources.FooterStats.readDayPartitioned(spark,
+          tier1Path, kept, newest)
       }
       span *= 8
     }
@@ -194,34 +185,43 @@ object AnalysisJob {
     // groups only — provably result-identical (see [[anchoredTier1]])
     val t1 = anchoredTier1(spark, tier1Path, windowStart, nowSec,
       baselineLookbackSec)
-    val anomalies = rules.enforce(
-      RhythmAnalyzer.detect(t1, windowStart, windowSec.toDouble,
-        baselineLookbackSec = baselineLookbackSec), nowSec)
-    val recentPoints = DtPrune(
-      t1.filter(col("ts_sec") >= windowStart), windowStart, nowSec)
-    val clusters = Promoter.rollup(anomalies, recentPoints)
-    if (!clusters.isEmpty) {
-      // an EXISTING serving graph must see batch-promoted rows too — the
-      // streaming path appends per micro-batch, and without this the
-      // batch path silently drifted the index (ADVICE r11 medium). The
-      // rollup is materialized once so the Tier-2 write and the graph
-      // append see the SAME rows (min_by ties could otherwise pick
-      // different representatives per execution); it is control-plane
-      // sized, so the localCheckpoint is bounded. A path whose store was
-      // never created stays untouched — no stray index dirs for callers
-      // that never built one.
-      val followIndex = graphIndexPath.filter { p =>
-        val root = new org.apache.hadoop.fs.Path(p)
-        root.getFileSystem(spark.sessionState.newHadoopConf()).exists(root)
+    // the baseline sample is cached for its two consumers and released
+    // when the cycle ends: left cached, every cycle leaked one cached
+    // plan into the session
+    val sample = RhythmAnalyzer.baselineSample(t1, windowStart,
+      baselineLookbackSec = baselineLookbackSec).cache()
+    try {
+      val anomalies = rules.enforce(
+        RhythmAnalyzer.detect(t1, windowStart, windowSec.toDouble,
+          baselineLookbackSec = baselineLookbackSec,
+          baseSample = Some(sample)), nowSec)
+      val recentPoints = DtPrune(
+        t1.filter(col("ts_sec") >= windowStart), windowStart, nowSec)
+      val rollup = Promoter.rollup(anomalies, recentPoints)
+      // the rollup is evaluated ONCE per cycle: it is control-plane sized,
+      // so it is collected, and the empty check, the Tier-2 write, the
+      // graph append and the returned rows all read that one
+      // materialization (min_by ties could otherwise pick different
+      // representatives per execution)
+      val rows = rollup.collect()
+      val clusters = spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), rollup.schema)
+      if (rows.nonEmpty) {
+        // one file per touched day: a handful of rows per cycle
+        clusters.coalesce(1)
+          .write.mode("append").partitionBy("dt").parquet(tier2Path)
+        // an EXISTING serving graph must see batch-promoted rows too —
+        // the streaming path appends per micro-batch, and without this
+        // the batch path silently drifted the index (ADVICE r11 medium).
+        // A path whose store was never created stays untouched — no
+        // stray index dirs for callers that never built one.
+        graphIndexPath.filter { p =>
+          val root = new org.apache.hadoop.fs.Path(p)
+          root.getFileSystem(spark.sessionState.newHadoopConf()).exists(root)
+        }.foreach(p => graft.search.TierIndex.append(clusters, p))
       }
-      val rows = if (followIndex.isDefined) clusters.localCheckpoint()
-                 else clusters
-      try {
-        rows.write.mode("append").partitionBy("dt").parquet(tier2Path)
-        followIndex.foreach(p => graft.search.TierIndex.append(rows, p))
-      } finally if (followIndex.isDefined) rows.unpersist()
-    }
-    clusters
+      clusters
+    } finally sample.unpersist()
   }
 
   /** Continuous mode: a rate-source heartbeat triggers [[runOnce]] per
