@@ -218,10 +218,31 @@ object ServeBench {
     // same-root read), so pre-r13 "cold" numbers actually read the
     // exact pin's cache — conservative for the crossover conclusion
     // (true cold is slower), but mislabeled
-    def pinAll(): Unit = { viaExactPin.pinServing(); viaGraphPin.pinServing() }
     // a reused store's size wins over the nBig arg (the generator formula
     // ties nowBig to the row count)
     val bigRows = spark.read.parquet(s"$work2/tier2").count()
+    // the driver heap of one snapshot, collected the way a pin collects
+    // it, then each pin timed
+    def pinAll(): Unit = {
+      val root = new org.apache.hadoop.fs.Path(s"$work2/tier2")
+      val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(root, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+      val snapBytes = org.apache.spark.util.SizeEstimator.estimate(
+        graft.search.ServingSnapshot.collect(files,
+          fs => spark.read.option("basePath", root.toString)
+            .parquet(fs.map(_.getPath.toString): _*), previous = None))
+      emitLine(s"""{"leg":"serve_big_snapshot","rows":$bigRows,""" +
+        s""""bytes":$snapBytes}""")
+      for ((mode, via) <- Seq("exact_pinned" -> viaExactPin,
+          "graph_pinned" -> viaGraphPin)) {
+        val t0 = System.nanoTime()
+        via.pinServing()
+        emitLine(f"""{"leg":"serve_big_pin","mode":"$mode","rows":$bigRows,""" +
+          f""""pin_s":${(System.nanoTime() - t0) / 1e9}%.2f}""")
+      }
+    }
     val nowBig = 1700000000L + bigRows * 6L
     val posBig = Seq("h3", "h1003"); val negBig = Seq("h40")
     def callBig(via: Via, verb: String): Unit = verb match {

@@ -21,12 +21,10 @@ object Tables {
     * tables that are immutable driver fixtures. The memoized DataFrame is
     * just an analyzed logical plan (immutable; file listing is re-resolved
     * lazily per action only when Spark needs splits), so reuse across
-    * queries changes no plan. Kill-switch: `spark.graft.tableMemo=false`
-    * restores the per-call read for callers that overwrite fixture paths
-    * in-session (no current caller does — ScaleGen generates in its own
-    * JVM). Keyed by session so a test session's frames never leak into
-    * another; entries live as long as the session (driver fixtures, ~10
-    * plans — bounded). */
+    * queries changes no plan. No caller overwrites fixture paths
+    * in-session (ScaleGen generates in its own JVM). Keyed by session so
+    * a test session's frames never leak into another; entries live as
+    * long as the session (driver fixtures, ~10 plans — bounded). */
   private[graft] val memo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
@@ -40,14 +38,11 @@ object Tables {
   private def evictStopped(): Unit =
     memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (!spark.conf.get("spark.graft.tableMemo", "true").toBoolean)
-      spark.read.parquet(s"$sfDir/$name.parquet")
-    else {
-      evictStopped()
-      memo.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-        k => k._1.read.parquet(k._2))
-    }
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    evictStopped()
+    memo.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
+      k => k._1.read.parquet(k._2))
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -17,13 +17,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * @param warehouse root directory: `tier1/`, `tier2/`, `rules`, `schemas`,
   *                  `evals/`, `checkpoints/`, `graphidx/` live under it
   * @param clustersServeThreshold Tier-2 corpus size (graph-index node
-  *                  count) at/above which `clusters` serves through the
-  *                  graph ANN leg instead of the exact scan — mirroring
-  *                  the reference's always-HNSW Tier-2 while keeping the
-  *                  exact path where scanning is cheaper than probing.
-  *                  Defaults to the verb's measured crossover. A store
-  *                  below it (row count) is pinned on the driver
-  *                  ([[pinServing]]).
+  *                  count) at/above which text-filtered `clusters` serves
+  *                  through the graph ANN leg instead of the exact rank —
+  *                  mirroring the reference's always-HNSW Tier-2 while
+  *                  keeping the exact path where scanning is cheaper than
+  *                  probing. Defaults to the verb's measured crossover.
+  *                  It gates routing only: a pin is a driver snapshot at
+  *                  every store size ([[pinServing]]).
   * @param triageServeThreshold the same gate for `triage`; its exact scan
   *                  stays competitive far longer because its query vector
   *                  is one cheap filtered average while clusters pays a
@@ -56,123 +56,38 @@ final class Via(spark: SparkSession, warehouse: String,
 
   /** Pin the current Tier-2 store as the serving snapshot.
     *
-    * Every pin freezes the store's CURRENT FILE LIST, and its Spark-side
-    * relation reads exactly those files. Below `clustersServeThreshold`
-    * rows (counted from the files' parquet footers, no Spark job) the
-    * snapshot lives ON THE DRIVER: one projected collect
-    * ([[graft.search.ServingSnapshot]], ~16-21 MB at 10k rows of 384-d
-    * vectors, ≤ ~160 MB at the threshold; a refresh collects only the
-    * files the previous snapshot did not hold) from which `clusters`
-    * (with and without a text filter) and `triage` rank in-JVM with the
-    * exact verbs' kernels — a call launches no Spark job, and nothing is
-    * cached on the executors. At or above the threshold the text-filtered
-    * `clusters` already routes to the graph, and the pin stays an
-    * executor-cached relation over the file list (the first call pays
-    * nothing: the pin materializes it).
+    * Every pin freezes the store's CURRENT FILE LIST and holds it ON THE
+    * DRIVER: one projected collect ([[graft.search.ServingSnapshot]],
+    * ~21 MB at 10k rows of 384-d vectors; SCALE.md's driver-memory
+    * table) from which `clusters` (with and without a text
+    * filter) and `triage` rank in-JVM with the exact verbs' kernels — a
+    * call launches no Spark job, and nothing is cached on the executors.
+    * A refresh collects only the files the previous snapshot did not
+    * hold.
     *
-    * Why a FILE-LIST relation, not a root read (r13): Spark's
-    * CacheManager substitutes a cached plan into any same-session query
-    * containing an equal fragment, so a cached root-read pin would both
-    * hijack every other reader of the store AND break its own refresh
-    * (the repin's identical plan no-ops against the displaced entry,
-    * which the swap then unpersists). Engine reads that must see the
-    * live store still go through [[liveTier2Read]] as belt-and-braces
-    * against any OTHER cached plan a session user may hold. The file
-    * list also backs every Spark-side reader of a driver pin — the
-    * degenerate-triage edge, the graph route and its exact fallback,
-    * `buildGraphIndex` — which is why a Tier-2 rewrite (compaction
-    * deletes the listed files) still repins ([[maintainIndexes]]).
+    * The pin's Spark-side relation reads exactly the frozen files, so
+    * every Spark-side reader of a pin — the degenerate-triage edge, the
+    * graph route and its exact fallback, `buildGraphIndex` — sees the
+    * rows the snapshot holds. That is also why a Tier-2 rewrite
+    * (compaction deletes the listed files) still repins
+    * ([[maintainIndexes]]).
     *
-    * The snapshot, its file list and [[pinGen]] swap together under
-    * [[pinLock]], so the displaced executor cache is always the one
-    * unpersisted: two unsynchronized concurrent calls could both read the
-    * same `old`, both unpersist it, and leave one of the two freshly
-    * cached snapshots persisted but unreferenced (ADVICE r11). The
-    * collect / cache materialization runs outside the lock. A serving
-    * call reads the pin reference once.
-    *
-    * The executor cache keeps the store's scan order (≈ dt/time order):
-    * the in-memory columnar cache prunes batches by per-batch column stats,
-    * so that order gives the time-windowed serving filters cheap batch
-    * skipping. A `rhythm_hash`-range-clustered layout was measured
-    * against it SAME-PROCESS on the 600k ServeBench store at 8 mixed
-    * callers — time order 22.2 QPS vs hash order 5.6 — and removed. */
+    * The pin is one immutable value in a volatile field, and a serving
+    * call reads it once, so a call never mixes two snapshots. Nothing is
+    * released when a pin is displaced: the old snapshot is garbage once
+    * its last in-flight call returns. */
   def pinServing(): Unit = {
     val files = liveTier2Files()
-    val raw = readTier2(files)
-    val rows = graft.sources.FooterStats.rowCount(spark, files)
-    val paths = files.map(_.getPath.toString)
-    val next =
-      if (rows.exists(_ < clustersServeThreshold))
-        Via.Pin(paths, raw, Some(graft.search.ServingSnapshot.collect(files,
-          readTier2, previous = pin.flatMap(_.snapshot))))
-      else {
-        val df = raw.cache()
-        df.count()
-        Via.Pin(paths, df, None)
-      }
-    val displaced = pinLock.synchronized {
-      val old = pin
-      pin = Some(next)
-      pinGen.incrementAndGet() // after the snapshot swap: see pinGen doc
-      old
-    }
-    exampleVecMemo.clear() // new snapshot, new example vectors
-    // only an executor-cache pin holds a cache entry; one over the SAME
-    // file list shares it with the new pin (plan-equal), so it stays
-    displaced.filter(old => old.snapshot.isEmpty &&
-        !(next.snapshot.isEmpty && old.files.sameElements(next.files)))
-      .foreach(_.read.unpersist())
+    pin = Some(Via.Pin(files.map(_.getPath.toString), readTier2(files),
+      graft.search.ServingSnapshot.collect(files, readTier2,
+        previous = pin.map(_.snapshot))))
   }
 
   /** Re-pin the snapshot over the store's current content. */
   def refreshServing(): Unit = pinServing()
 
   /** Drop the pin: serving calls read the store per call again. */
-  def unpinServing(): Unit = {
-    val displaced = pinLock.synchronized {
-      val old = pin
-      pin = None
-      pinGen.incrementAndGet()
-      old
-    }
-    exampleVecMemo.clear()
-    displaced.filter(_.snapshot.isEmpty).foreach(_.read.unpersist())
-  }
-  private val pinLock = new Object
-
-  /** Whether the held pin is a driver snapshot (for specs). */
-  private[graft] def pinnedOnDriver: Boolean = pin.exists(_.snapshot.isDefined)
-
-  /** Triage example-vector memo for the graph route under an
-    * executor-cache pin, valid EXACTLY while that pin is held: the
-    * vector is a pure function of the pinned snapshot + the example
-    * hashes, and the pin is the freeze contract (every pin/unpin/refresh
-    * clears it). Unpinned serving recomputes per call — the live store
-    * may move between calls; a driver snapshot recomputes it in-JVM.
-    * Saves the two small store-scan jobs (~55 ms at 150k rows) on every
-    * repeat-triage call, the common UI shape (a triage session iterates
-    * on the same example set).
-    *
-    * Keys carry [[pinGen]]: clear() alone cannot close the race where a
-    * triage call observes the old pin, the pin transitions (swap +
-    * clear), and ONLY THEN the call's computeIfAbsent inserts a vector
-    * computed against the displaced snapshot — that entry would serve
-    * for the whole life of the new pin (ADVICE r16). With the
-    * generation in the key, an entry inserted by a straggler is keyed
-    * to the superseded generation and no later lookup can hit it; the
-    * clear() remains for memory hygiene only. */
-  private val exampleVecMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Long, Seq[String], Seq[String]), Option[Seq[Double]]]()
-
-  /** Pin-generation counter, bumped under [[pinLock]] AFTER each
-    * snapshot swap (pin/refresh/unpin). A reader that observes
-    * generation g and then reads [[pin]] sees the snapshot of
-    * generation ≥ g, so a memo entry's vector can never be OLDER than
-    * the generation it is keyed under — the stale direction is
-    * impossible, and the newer direction only wastes one recompute
-    * (the entry is keyed to a gen nobody reads anymore). */
-  private val pinGen = new java.util.concurrent.atomic.AtomicLong(0)
+  def unpinServing(): Unit = pin = None
 
   /** Tier-2 read GUARANTEED to see the live store regardless of what
     * the session has cached. Spark's CacheManager substitutes a cached
@@ -181,8 +96,8 @@ final class Via(spark: SparkSession, warehouse: String,
     * such an entry (only Spark's own writers do) — measured r13: a root
     * read under a root-read cache returned pre-append rows until
     * unpersist (found by FreshBench racing promotion against a pinned
-    * server). The pin itself is a file-list plan now, but a session
-    * USER can still hold a root-read cache, so live-critical reads
+    * server). The pin itself caches nothing, but a session USER can
+    * still hold a root-read cache, so live-critical reads
     * (drift detection, re-sync sources, the pin's own snapshot) always
     * read the explicit CURRENT file list — a plan no root-read cache
     * entry matches. Listing is maintenance-cadence cost. */
@@ -611,12 +526,12 @@ final class Via(spark: SparkSession, warehouse: String,
       () => graft.search.IvfIndex.compact(spark, p, targetBytes)))
     // a pinned serving snapshot's lineage is the parquet file list frozen
     // at pin time: once a maintenance action REWRITES TIER-2 (the
-    // compaction swap deletes the listed files), an evicted cache block —
-    // or, under a driver snapshot, any Spark-side fallback — would read
+    // compaction swap deletes the listed files), any Spark-side reader of
+    // the pin (the degenerate triage edge, the graph fallback) would read
     // deleted files and fail the serving call.
     // Only a tier2 rewrite creates that hazard — tier1 compaction and
     // index folds/syncs never touch the pinned store's files, so they do
-    // not pay a re-materialization (ADVICE r12).
+    // not pay a repin (ADVICE r12).
     // ALSO repin when any of the pin's frozen input files no longer
     // exists: a sweep that died between its tier2 rewrite and this repin
     // (VERDICT r13 item 6) reports tier2 "none" on the NEXT sweep — the
@@ -640,58 +555,50 @@ final class Via(spark: SparkSession, warehouse: String,
   private[graft] var maintainCrashAfter: Option[String] = None
 
   // --- POST /analysis/tier2/clusters (V1/V6/A5/A6/J3/J4) --------------
-  /** Under a driver-snapshot pin every call ranks the snapshot in-JVM
-    * (exact, no Spark job — see [[pinServing]]). Otherwise text-filtered
-    * calls route through the Tier-2 graph ANN index when one exists and
-    * covers at least `clustersServeThreshold` nodes (the reference serves
-    * these through Qdrant's HNSW; exact scan below the crossover is OUR
-    * improvement on it). The graph route ranks its hits on the driver
-    * with the exact verb's kernels (parity-pinned by TierServeSpec); an
-    * under-filled indexed result falls back to the exact scan
-    * (ClusterSearch Scaladoc). */
+  /** Text-filtered calls route through the Tier-2 graph ANN index when
+    * one exists and covers at least `clustersServeThreshold` nodes (the
+    * reference serves these through Qdrant's HNSW; exact ranking below
+    * the crossover is OUR improvement on it). The graph route ranks its
+    * hits on the driver with the exact verb's kernels (parity-pinned by
+    * TierServeSpec); an under-filled indexed result falls back to the
+    * exact scan (ClusterSearch Scaladoc). Every other call is exact: it
+    * ranks the pinned snapshot in-JVM (no Spark job — see
+    * [[pinServing]]), or scans the store when nothing is pinned. */
   def clusters(
       nowSec: Long,
       startTs: Option[Long] = None,
       endTs: Option[Long] = None,
       textFilter: Option[String] = None): DataFrame = {
     val p = pin
-    (p.flatMap(_.snapshot), textFilter) match {
-      case (Some(snap), _) =>
-        ClusterSearch.clustersSnapshot(spark, snap, Some(rules), nowSec,
-          startTs, endTs, textFilter)
-      case (None, Some(f)) if graphServes(clustersServeThreshold) =>
+    (p, textFilter) match {
+      case (_, Some(f)) if graphServes(clustersServeThreshold) =>
         ClusterSearch.clustersIndexed(tier2Of(p), graphIndexPath,
           Some(rules), nowSec, startTs, endTs, textFilter = f)
-      case _ =>
+      case (Some(held), _) =>
+        ClusterSearch.clustersSnapshot(spark, held.snapshot, Some(rules),
+          nowSec, startTs, endTs, textFilter)
+      case (None, _) =>
         ClusterSearch.clusters(tier2Of(p), Some(rules), nowSec, startTs,
           endTs, textFilter)
     }
   }
 
   // --- POST /analysis/tier2/triage (V3/A7) ----------------------------
-  /** Routed like [[clusters]]: a driver snapshot first, then the graph at
-    * or above `triageServeThreshold` nodes, then the exact scan. */
+  /** Routed like [[clusters]]: the graph at or above
+    * `triageServeThreshold` nodes, otherwise the exact verb over the
+    * pinned snapshot or the store. A graph-routed call under a pin takes
+    * its example vector from the snapshot in-JVM. */
   def triage(positive: Seq[String], negative: Seq[String]): DataFrame = {
-    // generation read FIRST: the snapshot the memoized compute reads is
-    // then always ≥ the keyed generation (see pinGen doc — ADVICE r16)
-    val gen = pinGen.get()
     val p = pin
-    p.flatMap(_.snapshot) match {
-      case Some(snap) =>
-        ClusterSearch.triageSnapshot(snap, tier2Of(p), positive, negative)
-      case None if graphServes(triageServeThreshold) =>
-        // an executor-cache pin memoizes the example vector (pure
-        // function of the frozen snapshot; memo cleared on every pin
-        // transition)
-        val qv =
-          if (p.isDefined)
-            Some(exampleVecMemo.computeIfAbsent(
-              (gen, positive.sorted, negative.sorted),
-              _ => ClusterSearch.exampleVectorFast(tier2Of(p), positive,
-                negative)))
-          else None
-        ClusterSearch.triageIndexedImpl(tier2Of(p), graphIndexPath, positive,
-          negative, ClusterSearch.TriageLimit, precomputedQv = qv)._1
+    if (graphServes(triageServeThreshold))
+      ClusterSearch.triageIndexedImpl(tier2Of(p), graphIndexPath, positive,
+        negative, ClusterSearch.TriageLimit, precomputedQv = p.map(held =>
+          ClusterSearch.exampleVectorDriver(held.snapshot, positive,
+            negative)))._1
+    else p match {
+      case Some(held) =>
+        ClusterSearch.triageSnapshot(held.snapshot, held.read, positive,
+          negative)
       case None => ClusterSearch.triage(tier2Of(p), positive, negative)
     }
   }
@@ -784,10 +691,9 @@ object Via {
       file: org.apache.hadoop.fs.Path => Boolean)
 
   /** A held serving pin: the Tier-2 file list frozen at pin time, the
-    * Spark relation over it (executor-cached when there is no driver
-    * snapshot), and the driver snapshot below the clusters crossover. */
+    * Spark relation over it, and the driver snapshot of its rows. */
   private final case class Pin(files: Seq[String], read: DataFrame,
-      snapshot: Option[graft.search.ServingSnapshot])
+      snapshot: graft.search.ServingSnapshot)
 
   /** One maintenance decision: which store, what ran, why. */
   final case class Maintenance(target: String, action: String, detail: String)

@@ -180,7 +180,7 @@ object ClusterSearch {
   // already ON THE DRIVER: a graph probe's O(k) hits (ServingHit payload
   // + embedding — Qdrant's hit-with-payload model; the only graph
   // serving route, VERDICT r15 item 6), and every row of a store that
-  // `Via` pins as a [[ServingSnapshot]] (below the clusters crossover).
+  // `Via` pins as a [[ServingSnapshot]].
   // Pushing either back through a Catalyst pipeline costs 2-3 jobs plus
   // planning per call (~160 ms of the ~275 ms graph-served p50 at 150k
   // rows; ~290-560 ms per exact call on a pinned 10k-row store) to
@@ -483,7 +483,7 @@ object ClusterSearch {
       positiveHashes: Seq[String],
       negativeHashes: Seq[String],
       limit: Int = TriageLimit): DataFrame =
-    exampleVectorDriver(snapshot.rows, positiveHashes, negativeHashes) match {
+    exampleVectorDriver(snapshot, positiveHashes, negativeHashes) match {
       case Some(qv) =>
         localRows(tier2.sparkSession, rankTriageDriver(snapshot.rows,
           (positiveHashes ++ negativeHashes).toSet, qv, limit), TriageOutSchema)
@@ -549,11 +549,11 @@ object ClusterSearch {
     recommendVector(ps, pc, ns, nc, negativeHashes.nonEmpty)
   }
 
-  /** [[exampleVectorFast]] over driver-held rows (a pinned snapshot):
-    * the same per-role sums over the float-cast values, one pass in
-    * snapshot order. */
-  private def exampleVectorDriver(
-      cands: Iterable[Cand],
+  /** [[exampleVectorFast]] over a pinned snapshot's rows: the same
+    * per-role sums over the float-cast values, one pass in snapshot
+    * order, no Spark job. */
+  private[graft] def exampleVectorDriver(
+      snapshot: ServingSnapshot,
       positiveHashes: Seq[String],
       negativeHashes: Seq[String]): Option[Seq[Double]] = {
     val dim = graft.functions.EmbedText.Dim
@@ -565,7 +565,7 @@ object ClusterSearch {
       var i = 0; while (i < dim && i < v.length) { sum(i) += v(i); i += 1 }
     }
     // a NULL hash never matches isin; NULL/empty vectors are skipped
-    cands.foreach { c =>
+    snapshot.rows.foreach { c =>
       if (c.hash != null && c.dense != null && c.dense.nonEmpty) {
         if (posSet(c.hash)) { addInto(ps, c.dense); pc += 1 }
         if (negSet(c.hash)) { addInto(ns, c.dense); nc += 1 }
@@ -584,10 +584,9 @@ object ClusterSearch {
     else Some(ps.indices.map(i => 2.0 * ps(i) / pc - ns(i) / nc))
 
   /** Returns (result, servedViaGraph). `precomputedQv` lets a caller
-    * holding a frozen serving snapshot (Via's pin) memoize the example
-    * vector across calls — the two store scans it costs are
-    * re-derivable from the pinned snapshot only, so the memo's validity
-    * IS the pin's validity (Via clears it on pin/unpin/refresh). */
+    * holding a pinned snapshot pass the example vector it computed
+    * in-JVM ([[exampleVectorDriver]]) instead of the two store scans of
+    * [[exampleVectorFast]]. */
   private[graft] def triageIndexedImpl(
       tier2: DataFrame,
       graphPath: String,

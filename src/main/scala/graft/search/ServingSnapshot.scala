@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions.{col, input_file_name, struct}
   * every row ([[ClusterSearch.Cand]]'s fields, `dense` decoded as
   * primitive float arrays), without the `sample_logs`, `sparse_*` and
   * `entity_type` columns no serving verb reads. `Via.pinServing` builds
-  * one when the store is below its clusters crossover, and
-  * `ClusterSearch.clustersSnapshot` / `triageSnapshot` rank over it with
-  * no Spark job. Immutable: a refresh builds a new snapshot.
+  * one, and `ClusterSearch.clustersSnapshot` / `triageSnapshot` rank
+  * over it with no Spark job. Immutable: a refresh builds a new
+  * snapshot.
   *
   * Rows are held per data file, in file-list order. Parquet files are
   * immutable once committed (appends add files, compaction swaps in new
@@ -47,8 +47,7 @@ object ServingSnapshot {
     new ServingSnapshot(files.toVector.map { f =>
       val k = keyOf(f)
       k -> held.getOrElse(k, collected.get(k._1).fold(
-        IndexedSeq.empty[ClusterSearch.Cand])(
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(_)))
+        IndexedSeq.empty[ClusterSearch.Cand])(_.toVector))
     })
   }
 

@@ -152,20 +152,6 @@ object FooterStats {
       column: String): Seq[(Path, Option[FileStat])] =
     readConcurrently(files, spark.sessionState.newHadoopConf(), column)
 
-  /** Total row count of `files` from their footers' row-group counts
-    * (zero Spark jobs; memoized with the column stats). None when any
-    * footer is unreadable. */
-  def rowCount(spark: SparkSession, files: Seq[FileStatus]): Option[Long] = {
-    val perFile = readConcurrently(files, spark.sessionState.newHadoopConf(),
-      RowCountColumn).map(_._2)
-    if (perFile.exists(_.isEmpty)) None
-    else Some(perFile.flatten.map(_.nonNullRows).sum)
-  }
-
-  /** Memo column key of [[rowCount]]'s per-file entries: no parquet column
-    * path can be empty. */
-  private val RowCountColumn = ""
-
   /** The data files directly under `dir` (the shared hidden-file
     * filter), for callers that list once and reuse the statuses. */
   def listDataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
@@ -262,8 +248,7 @@ object FooterStats {
     * THROWS on IO failure — the caller decides whether a failure is
     * cacheable (it is not). A PROVABLY all-null row group contributes
     * no rows and no bounds — like an empty file, not like missing
-    * stats (FooterStatsSpec). For [[RowCountColumn]]: the file's total
-    * row count, no bounds. */
+    * stats (FooterStatsSpec). */
   private def readFileStats(f: Path,
       conf: org.apache.hadoop.conf.Configuration,
       column: String): Option[FileStat] = {
@@ -271,9 +256,6 @@ object FooterStats {
       try {
         import scala.jdk.CollectionConverters._
         val blocks = reader.getFooter.getBlocks.asScala
-        if (column == RowCountColumn)
-          return Some(FileStat(Long.MaxValue, Long.MinValue,
-            blocks.map(_.getRowCount).sum))
         var mn = Long.MaxValue; var mx = Long.MinValue; var rows = 0L
         var ok = true
         blocks.foreach { b =>

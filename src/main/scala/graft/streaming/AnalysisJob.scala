@@ -78,9 +78,8 @@ object AnalysisJob {
     * Declines (→ full window) when anchoring cannot help or cannot be
     * proven: no dated partitions, straddling partitions holding more
     * than `FooterStats.MaxFiles` files (un-compacted stores should spend
-    * cluster parallelism, not driver footer reads), no file excluded, or
-    * `spark.graft.analysis.anchor=false` (the operational off-switch and
-    * the A/B lever AnchorBench uses). */
+    * cluster parallelism, not driver footer reads), or no file
+    * excluded. */
   private[graft] def anchoredTier1(
       spark: SparkSession,
       tier1Path: String,
@@ -91,13 +90,6 @@ object AnalysisJob {
     import org.apache.hadoop.fs.Path
     def full() = tier1Window(spark, tier1Path,
       windowStart - baselineLookbackSec, nowSec)
-    // defensive parse (ADVICE r13): a malformed value must not fail every
-    // analysis cycle — fall back to anchoring on, matching the
-    // residentBufferMaxRows / MemoConf malformed-value stance
-    val anchorOn =
-      try spark.conf.get("spark.graft.analysis.anchor", "true").toBoolean
-      catch { case _: IllegalArgumentException => true }
-    if (!anchorOn) return full()
     val root = new Path(tier1Path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return full()
@@ -177,14 +169,33 @@ object AnalysisJob {
       nowSec: Long,
       windowSec: Long = 60,
       baselineLookbackSec: Long = RhythmAnalyzer.DefaultBaselineLookbackSec,
-      graphIndexPath: Option[String] = None): DataFrame = {
+      graphIndexPath: Option[String] = None): DataFrame =
+    runCycle(spark, tier1Path, tier2Path, rules, nowSec, windowSec,
+      baselineLookbackSec, graphIndexPath, anchored = true)
+
+  /** [[runOnce]]; `anchored = false` reads the plain [[tier1Window]]
+    * instead of [[anchoredTier1]] — the reference side of the
+    * anchored-equals-full comparison (AnchoredWindowSpec). */
+  private[streaming] def runCycle(
+      spark: SparkSession,
+      tier1Path: String,
+      tier2Path: String,
+      rules: Rules,
+      nowSec: Long,
+      windowSec: Long,
+      baselineLookbackSec: Long,
+      graphIndexPath: Option[String],
+      anchored: Boolean): DataFrame = {
     val windowStart = nowSec - windowSec
     // the detector needs window + look-back horizon: dt-pruned to exactly
     // that, then file-anchored below the window (footer zone maps) so a
     // compacted multi-GB day feeds the 60 s trigger from its newest row
     // groups only — provably result-identical (see [[anchoredTier1]])
-    val t1 = anchoredTier1(spark, tier1Path, windowStart, nowSec,
-      baselineLookbackSec)
+    val t1 =
+      if (anchored) anchoredTier1(spark, tier1Path, windowStart, nowSec,
+        baselineLookbackSec)
+      else tier1Window(spark, tier1Path, windowStart - baselineLookbackSec,
+        nowSec)
     // the baseline sample is cached for its two consumers and released
     // when the cycle ends: left cached, every cycle leaked one cached
     // plan into the session

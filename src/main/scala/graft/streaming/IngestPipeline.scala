@@ -367,10 +367,15 @@ object IngestPipeline {
 
   /** S3 — live tail: last `n` rows, optional case-insensitive substring
     * filter (`/root/reference/app/api/v1/endpoints/stream.py:12-34`; the
-    * reference's oversampled deque read becomes an exact filter→top-k). */
+    * reference's oversampled deque read becomes an exact filter→top-k).
+    * The order is total — `ts_sec desc, point_id asc` (`point_id` is a
+    * per-row uuid) — so rows tied on one second at the `n` boundary are
+    * the same whatever the scan order. `Via.tail`'s window probe keeps
+    * it: tied rows share one `ts_sec`, so a window holds all or none of
+    * them. */
   def tail(tier1: DataFrame, n: Int = 100, substring: Option[String] = None): DataFrame = {
     val base = substring.fold(tier1)(f =>
       tier1.filter(lower(col("body")).contains(f.toLowerCase)))
-    base.orderBy(col("ts_sec").desc).limit(n)
+    base.orderBy(col("ts_sec").desc, col("point_id")).limit(n)
   }
 }

@@ -12,7 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class ConfSurfaceSpec extends AnyFunSuite {
 
   private val Expected = Set(
-    "spark.graft.analysis.anchor",
     "spark.graft.cc.driverMaxPairs",
     "spark.graft.cc.edgeCheckpointMaxRows",
     "spark.graft.dimBroadcastBytes",
@@ -20,7 +19,6 @@ class ConfSurfaceSpec extends AnyFunSuite {
     "spark.graft.memo.shingleBits",
     "spark.graft.memo.simhashBits",
     "spark.graft.serve.residentBufferMaxRows",
-    "spark.graft.tableMemo",
     "spark.graft.topKPerGroup.groupBudget")
 
   private val KeyLiteral = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r

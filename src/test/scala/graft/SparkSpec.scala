@@ -10,6 +10,28 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Spark jobs started on this thread while `body` runs. */
+  protected def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-jobs-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted calls")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get()
+  }
+
   override def afterAll(): Unit = {
     // keep the session alive across suites; sbt's forked JVM exit tears it down
     super.afterAll()

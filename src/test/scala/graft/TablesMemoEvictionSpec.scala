@@ -37,16 +37,4 @@ class TablesMemoEvictionSpec extends AnyFunSuite {
     assert(Tables.memo.keySet.stream.anyMatch(k => k._1 eq s2),
       "live session's entry must be memoized")
   }
-
-  test("memo kill-switch still bypasses the map entirely") {
-    val s = SparkSpec.session
-    s.conf.set("spark.graft.tableMemo", "false")
-    try {
-      val before = Tables.memo.size
-      val df: org.apache.spark.sql.DataFrame = Tables.load(s, SfDir, "supplier")
-      assert(df.count() > 0)
-      assert(Tables.memo.size == before,
-        "tableMemo=false must not insert entries")
-    } finally s.conf.set("spark.graft.tableMemo", "true")
-  }
 }

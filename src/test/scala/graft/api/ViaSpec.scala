@@ -180,6 +180,33 @@ class ViaSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
 
+  test("tail breaks ties on one second by point_id, before and after compaction") {
+    import spark.implicits._
+    val via = new Via(spark, Files.createTempDirectory("via-tailtie").toString)
+    // 500 rows in ONE second just before midnight, landed as five files of
+    // a closed day (compaction rewrites it), and 10 newer rows in the open
+    // day: tail(100) ends inside the tied second, and the 64 s probe
+    // window holds both days
+    val midnight = (now / 86400L + 1) * 86400L
+    (0 until 5).foreach { b =>
+      via.ingestBatch((0 until 100).map(i =>
+        otel("svc", "INFO", midnight - 30, s"tied b$b i$i")).toDF("value"))
+    }
+    via.ingestBatch((0 until 10).map(i =>
+      otel("svc", "INFO", midnight + 10 + i, s"newer $i")).toDF("value"))
+    def fullSort(): Seq[String] =
+      spark.read.parquet(via.tier1Path).collect().toSeq
+        .sortBy(r => (-r.getAs[Long]("ts_sec"), r.getAs[String]("point_id")))
+        .take(100).map(_.toString)
+    def tail100(): Seq[String] = via.tail(n = 100).collect().map(_.toString).toSeq
+    val expected = fullSort()
+    assert(tail100() == expected, "tail diverged from the full sort")
+    val stats = via.compactTier1()
+    assert(stats.filesAfter < stats.filesBefore, stats.toString)
+    assert(fullSort() == expected)
+    assert(tail100() == expected, "tail diverged from the full sort after compaction")
+  }
+
   test("tail over a store with a null-ts partition: probe stays exact") {
     import spark.implicits._
     val via = new Via(spark, Files.createTempDirectory("via-tailnull").toString)

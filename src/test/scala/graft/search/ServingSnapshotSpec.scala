@@ -1,21 +1,18 @@
 package graft.search
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{GraftFunctions, SparkSpec}
 import graft.api.Via
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The driver-snapshot pin: below `clustersServeThreshold` a pinned Via
-  * serves `clusters` and `triage` from a driver-held snapshot, row for
-  * row what the unpinned Spark verbs return on the same warehouse — rule
-  * enforcement, NULL and wrong-dimension edges, group ties, the
-  * degenerate triage edge, refresh and compaction included — and
-  * launches no Spark job per call. At or above the threshold the pin
-  * stays an executor cache with the same rows. */
+/** The driver-snapshot pin: a pinned Via serves `clusters` and `triage`
+  * from a driver-held snapshot, row for row what the unpinned Spark verbs
+  * return on the same warehouse — rule enforcement, NULL and
+  * wrong-dimension edges, group ties, the degenerate triage edge, refresh
+  * and compaction included — and launches no Spark job per call,
+  * whatever the store's size against `clustersServeThreshold`. */
 class ServingSnapshotSpec extends SparkSpec {
 
   private val T0 = 1700000000L
@@ -125,7 +122,6 @@ class ServingSnapshotSpec extends SparkSpec {
     val pinned = new Via(spark, wh)
     val unpinned = new Via(spark, wh)
     pinned.pinServing()
-    assert(pinned.pinnedOnDriver)
     assertParity(pinned, unpinned, "pinned")
 
     // the edges are exercised, not just present
@@ -147,7 +143,6 @@ class ServingSnapshotSpec extends SparkSpec {
     regular(30, 5000L, 40).write.mode("append").partitionBy("dt")
       .parquet(s"$wh/tier2")
     pinned.refreshServing()
-    assert(pinned.pinnedOnDriver)
     assertParity(pinned, unpinned, "refreshed")
 
     // a Tier-2 compaction under the pin -> repin -> parity again
@@ -160,32 +155,10 @@ class ServingSnapshotSpec extends SparkSpec {
     pinned.unpinServing()
   }
 
-  /** Spark jobs started on this thread while `body` runs. */
-  private def jobsStarted(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"snapshot-jobs-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "serving calls")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
-  }
-
   test("pinned clusters, clusters_text and triage start no Spark job") {
     val wh = warehouse(240)
     val via = new Via(spark, wh)
     via.pinServing()
-    assert(via.pinnedOnDriver)
     val served = Seq(
       () => via.clusters(Now, Some(Lo), Some(Hi)),
       () => via.clusters(Now, textFilter = Some("failed user")),
@@ -194,32 +167,26 @@ class ServingSnapshotSpec extends SparkSpec {
     assert(jobsStarted(served.foreach(_().collect())) == 0)
     // a refresh re-reads only files the snapshot does not hold: none here
     assert(jobsStarted(via.refreshServing()) == 0)
-    assert(via.pinnedOnDriver)
     // the listener does see jobs: the same call unpinned starts some
     assert(jobsStarted(new Via(spark, wh).clusters(Now).collect()) > 0)
     via.unpinServing()
   }
 
-  test("a store at or above the threshold keeps the executor-cache pin, same rows") {
+  test("a pin at threshold = rows is a snapshot: no cache, same rows") {
     val wh = warehouse(240)
     val rows = spark.read.parquet(s"$wh/tier2").count()
-    val driver = new Via(spark, wh)
-    val cached = new Via(spark, wh, clustersServeThreshold = rows)
+    val default = new Via(spark, wh)
+    val atRows = new Via(spark, wh, clustersServeThreshold = rows)
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
-    driver.pinServing()
-    assert(driver.pinnedOnDriver)
-    assert(sc.getPersistentRDDs.size == before, "a driver pin caches nothing")
-    cached.pinServing()
-    assert(!cached.pinnedOnDriver)
-    assert(sc.getPersistentRDDs.size == before + 1)
-    assertParity(cached, driver, "executor cache vs driver")
-    // a repin over an unchanged store shares the plan-equal cache entry,
-    // so the swap must not unpersist it
-    cached.refreshServing()
-    assert(sc.getPersistentRDDs.size == before + 1)
-    cached.unpinServing()
-    driver.unpinServing()
-    assert(sc.getPersistentRDDs.size == before)
+    default.pinServing()
+    atRows.pinServing()
+    atRows.refreshServing()
+    assert(sc.getPersistentRDDs.size == before, "a pin caches nothing")
+    assertParity(atRows, default, "threshold = rows vs default")
+    assert(jobsStarted(atRows.clusters(Now).collect()) == 0,
+      "the pin serves from the driver")
+    atRows.unpinServing()
+    default.unpinServing()
   }
 }

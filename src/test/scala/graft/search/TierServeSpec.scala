@@ -222,6 +222,33 @@ class TierServeSpec extends SparkSpec {
       rowStrs(viaExact.triage(Seq("h3", "h17"), Seq("h40"))))
   }
 
+  test("a pinned Via serves clusters_text and triage through the graph") {
+    val wh = java.nio.file.Files.createTempDirectory("viagpin").toString
+    tier2Fixture(600).write.partitionBy("dt").parquet(s"$wh/tier2")
+    def graphVia() = new Via(spark, wh,
+      clustersServeThreshold = 1L, triageServeThreshold = 1L)
+    val pinned = graphVia()
+    val unpinned = graphVia()
+    val exact = new Via(spark, wh, clustersServeThreshold = Long.MaxValue,
+      triageServeThreshold = Long.MaxValue)
+    pinned.buildGraphIndex()
+    pinned.pinServing()
+    assert(pinned.clustersServesViaGraph && pinned.triageServesViaGraph)
+    val now = 1700000000L + 700 * 60
+    val pos = Seq("h3", "h17"); val neg = Seq("h40")
+    def clustersText(via: Via) = via.clusters(now, textFilter = Some("failed user"))
+    assert(rowStrs(clustersText(pinned)) == rowStrs(clustersText(exact)))
+    assert(rowStrs(pinned.triage(pos, neg)) == rowStrs(exact.triage(pos, neg)))
+    // graph-served clusters_text starts only the probe's jobs; pinned
+    // triage takes its example vector from the snapshot, so it starts the
+    // same jobs and no more, while the unpinned call scans the store for it
+    val probeJobs = jobsStarted(clustersText(pinned).collect())
+    assert(probeJobs > 0)
+    assert(jobsStarted(pinned.triage(pos, neg).collect()) == probeJobs)
+    assert(jobsStarted(unpinned.triage(pos, neg).collect()) > probeJobs)
+    pinned.unpinServing()
+  }
+
   test("batch promotion follows an existing graph; drift re-syncs (ADVICE r11)") {
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("bfresh").toString

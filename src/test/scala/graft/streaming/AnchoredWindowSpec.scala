@@ -70,13 +70,6 @@ class AnchoredWindowSpec extends SparkSpec {
     val declined = AnalysisJob.anchoredTier1(spark, tier1, W, nowSec,
       lookback, histSample = 1000000)
     assert(declined.inputFiles.sorted.toSeq == full.inputFiles.sorted.toSeq)
-    // operational off-switch
-    spark.conf.set("spark.graft.analysis.anchor", "false")
-    try {
-      val off = AnalysisJob.anchoredTier1(spark, tier1, W, nowSec,
-        lookback, HistSample)
-      assert(off.inputFiles.sorted.toSeq == full.inputFiles.sorted.toSeq)
-    } finally spark.conf.unset("spark.graft.analysis.anchor")
   }
 
   test("runOnce end-to-end: anchor on == anchor off (clusters and Tier-2)") {
@@ -85,16 +78,14 @@ class AnchoredWindowSpec extends SparkSpec {
     val nowSec = W + 60
     def runWith(anchor: Boolean): Seq[String] = {
       val work = Files.createTempDirectory(s"anchor2-$anchor").toString
-      spark.conf.set("spark.graft.analysis.anchor", anchor.toString)
-      try {
-        val rules = new graft.control.Rules(spark, s"$work/rules")
-        val clusters = AnalysisJob.runOnce(spark, tier1, s"$work/tier2",
-          rules, nowSec, windowSec = 60)
-        val promoted = spark.read.parquet(s"$work/tier2")
-          .drop("point_id").collect().map(_.toString).sorted.toSeq
-        assert(clusters.count() > 0, "fixture promoted nothing")
-        promoted
-      } finally spark.conf.unset("spark.graft.analysis.anchor")
+      val rules = new graft.control.Rules(spark, s"$work/rules")
+      val clusters = AnalysisJob.runCycle(spark, tier1, s"$work/tier2",
+        rules, nowSec, windowSec = 60,
+        RhythmAnalyzer.DefaultBaselineLookbackSec, None, anchored = anchor)
+      val promoted = spark.read.parquet(s"$work/tier2")
+        .drop("point_id").collect().map(_.toString).sorted.toSeq
+      assert(clusters.count() > 0, "fixture promoted nothing")
+      promoted
     }
     assert(runWith(anchor = true) == runWith(anchor = false),
       "anchored analysis cycle promoted different clusters")

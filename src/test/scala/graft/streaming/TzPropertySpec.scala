@@ -56,6 +56,7 @@ class TzPropertySpec extends SparkSpec {
       ("hum" + (i % 5), w - 1 - i * 97L, 1000L + i))
     val burst = (0 until 5).map(i => ("burst", w + 10 + i, 9000L + i))
     (steady ++ burst).toDF("rhythm_hash", "ts_sec", "event_id")
+      .withColumn("point_id", concat(lit("p"), col("event_id")))
       .withColumn("service", lit("svc"))
       .withColumn("severity", lit("INFO"))
       .withColumn("body", lit("tz property fixture row"))
